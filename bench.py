@@ -23,7 +23,10 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from state_economics_end_to_end_data_pipeline_spark.plans import load_all  # noqa: E402
-from state_economics_end_to_end_data_pipeline_spark.session import get_spark  # noqa: E402
+from state_economics_end_to_end_data_pipeline_spark.session import (  # noqa: E402
+    LOCAL_CPUS,
+    get_spark,
+)
 
 
 def main() -> int:
@@ -173,7 +176,7 @@ def _persist_full_bench(payload: dict, repo_root: Path | None = None) -> None:
         rnd = (max(rounds) + 1) if rounds else 1
         stamped = dict(payload)
         stamped["load_avg_1m"] = round(os.getloadavg()[0], 2)
-        stamped["cpus"] = os.cpu_count()
+        stamped["cpus"] = LOCAL_CPUS  # the local[N] get_spark ran on
         def read_record_or_none(p: Path):
             # shared corrupt-record guard: a malformed JSON file must
             # never crash persist after a full bench run

@@ -3,13 +3,16 @@
 The reference's entire runtime test strategy is ``check_primary_key``
 (`final project cleaning & upload dag 1.py:71-79`): raise if any key column
 contains nulls or any key combination repeats. We reproduce those semantics
-(including message shape) as distributed aggregates -- two short jobs, no
+(including message shape) as distributed aggregates: every constraint is a
+DataFrame of violating rows, and ``raise_first_violation`` counts any number
+of them in one union-all aggregate drained by a single ``collect()`` -- no
 collect of data rows, scale-safe.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -28,32 +31,58 @@ def duplicate_keys(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     )
 
 
-def null_key_count(df: DataFrame, key_cols: Sequence[str]) -> int:
+def null_key_rows(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Rows where any key column is null (reference: ``isnull().sum()``,
-    DAG1:72-75). Single aggregate job."""
-    any_null = None
-    for c in key_cols:
-        cond = F.col(c).isNull()
-        any_null = cond if any_null is None else (any_null | cond)
-    row = df.filter(any_null).select(F.count(F.lit(1)).alias("n")).first()
-    return int(row["n"])
+    DAG1:72-75)."""
+    return df.filter(reduce(lambda a, b: a | b, [F.col(c).isNull() for c in key_cols]))
+
+
+def null_key_count(df: DataFrame, key_cols: Sequence[str]) -> int:
+    """Number of ``null_key_rows``. Single aggregate job."""
+    return null_key_rows(df, key_cols).count()
+
+
+def primary_key_checks(
+    df: DataFrame, key_cols: Sequence[str], table: str = ""
+) -> list[tuple[DataFrame, str]]:
+    """The two PK constraints as (violating rows, message) checks for
+    ``raise_first_violation``: nulls first, then duplicates."""
+    where = f"Primary key violation in {table or '<df>'}"
+    return [
+        (
+            null_key_rows(df, key_cols),
+            f"{where}: {{n}} rows with null in key columns {list(key_cols)}",
+        ),
+        (
+            duplicate_keys(df, key_cols),
+            f"{where}: duplicate values for key columns {list(key_cols)}",
+        ),
+    ]
+
+
+def raise_first_violation(checks: Sequence[tuple[DataFrame, str]]) -> None:
+    """Evaluate every check in ONE Spark action and raise ``ValueError``
+    with the message of the first (in list order) that has violating rows;
+    ``{n}`` in a message becomes that check's row count.
+
+    Each check's rows are reduced to their check index and the union of all
+    of them is counted per index, so the whole gate is one query: subplans
+    the checks share (a parent key set several FKs reference) run once via
+    exchange reuse, and the driver receives at most one row per check."""
+    flagged = reduce(
+        DataFrame.unionAll,
+        [rows.select(F.lit(i).alias("check")) for i, (rows, _) in enumerate(checks)],
+    )
+    counts = dict(flagged.groupBy("check").count().collect())
+    if counts:
+        i = min(counts)
+        raise ValueError(checks[i][1].replace("{n}", str(counts[i])))
 
 
 def check_primary_key(df: DataFrame, key_cols: Sequence[str], table: str = "") -> None:
     """Q1 -- raise ``ValueError`` if ``key_cols`` is not a valid primary key
     (nulls or duplicates), mirroring reference behavior (DAG1:71-79)."""
-    n_null = null_key_count(df, key_cols)
-    if n_null:
-        raise ValueError(
-            f"Primary key violation in {table or '<df>'}: "
-            f"{n_null} rows with null in key columns {list(key_cols)}"
-        )
-    n_dup = duplicate_keys(df, key_cols).limit(1).count()
-    if n_dup:
-        raise ValueError(
-            f"Primary key violation in {table or '<df>'}: "
-            f"duplicate values for key columns {list(key_cols)}"
-        )
+    raise_first_violation(primary_key_checks(df, key_cols, table))
 
 
 def fk_orphans(

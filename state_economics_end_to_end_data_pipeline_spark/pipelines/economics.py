@@ -9,6 +9,11 @@ table; the only shuffles are the dedups/aggregations themselves, and every
 join is a broadcast against a dimension (<= 60 rows in the reference data;
 the engine still works when facts are 100 TB because dims stay dim-sized).
 
+``run(validate=True)`` ends at the integrity gate: each output is
+materialized once (local checkpoint) and all PK/FK constraints are checked
+in one Spark action over those materialized tables, which are what
+``run`` returns and ``publish`` writes.
+
 Documented deviations from reference values (BASELINE.md):
 - GeoFIPS/Year canonicalized to int (reference zero-pads then loses it via
   XCom re-inference, DAG1:39-40 vs :65).
@@ -35,7 +40,7 @@ from ..functions.cleaning import (
     strip_chars,
 )
 from ..io.readers import read_csv, read_excel_sheet
-from ..operators.quality import check_primary_key
+from ..operators.quality import fk_orphans, primary_key_checks, raise_first_violation
 from ..operators.reshape import surrogate_key, unpivot_wide_years
 
 GDP_ID_COLS = [
@@ -92,7 +97,8 @@ PARTITIONED_PUBLISH: dict[str, list[str]] = {
 
 @dataclass
 class EconomicsETL:
-    """End-to-end pipeline. ``run()`` returns the 11 output DataFrames.
+    """End-to-end pipeline. ``run()`` returns the 11 output DataFrames,
+    validated and materialized unless ``validate=False``.
 
     Stage structure mirrors DAG1 ``load >> transform >> save >> upload``
     but as pure functions over DataFrames; persistence is the caller's
@@ -314,8 +320,11 @@ class EconomicsETL:
     # ---------------- orchestration ----------------
 
     def run(self, validate: bool = True) -> dict[str, DataFrame]:
-        """Full pipeline -> the 11 output tables, PK-validated like the
-        reference (DAG1 call sites in PRIMARY_KEYS)."""
+        """Full pipeline -> the 11 output tables. With ``validate`` they
+        pass the PK/FK gate (``validate_outputs``) and come back
+        materialized: later actions and ``publish`` read the validated rows
+        instead of recomputing the lineage from the raw files. Without it
+        they are lazy DataFrames over the raw files."""
         unemp = self.unemployment_tables(self.load_unemployment())
         gdp = self.gdp_tables(self.load_gdp())
         location = self.location_table(
@@ -327,7 +336,7 @@ class EconomicsETL:
         tables.update(self.school_tables(self.load_school(), location))
         tables.update(self.min_wage_tables(self.load_min_wage(), location))
         if validate:
-            self.validate_outputs(tables)
+            tables = self.validate_outputs(tables)
         return tables
 
     @staticmethod
@@ -346,18 +355,26 @@ class EconomicsETL:
         return paths
 
     @staticmethod
-    def validate_outputs(tables: dict[str, DataFrame]) -> None:
+    def validate_outputs(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         """Integrity gate over the 11 outputs: the reference's PK asserts
         (DAG1 call sites) plus the FK edges its ERD declares but never
-        checks. Raises ValueError naming the first broken constraint."""
-        for name, keys in PRIMARY_KEYS.items():
-            check_primary_key(tables[name], keys, table=name)
-        from ..operators.quality import fk_orphans
+        checks. Raises ValueError naming the first broken constraint (PKs
+        in PRIMARY_KEYS order, nulls before duplicates, then FKs).
 
+        Each table is materialized once (``localCheckpoint``: executor
+        blocks, nothing in the CacheManager) and all 16 constraints run as
+        one query over the materialized tables, so the ETL lineage is not
+        recomputed per check. Returns the materialized tables: what the
+        gate passed is exactly what a later publish writes."""
+        tables = {name: df.localCheckpoint(eager=True) for name, df in tables.items()}
+        checks = []
+        for name, keys in PRIMARY_KEYS.items():
+            checks += primary_key_checks(tables[name], keys, table=name)
         for child, fk, parent, pk in FOREIGN_KEYS:
-            n = fk_orphans(tables[child], tables[parent], fk, pk).limit(1).count()
-            if n:
-                raise ValueError(
-                    f"Foreign key violation: {child}.{fk} has rows "
-                    f"with no parent in {parent}.{pk}"
-                )
+            checks.append((
+                fk_orphans(tables[child], tables[parent], fk, pk),
+                f"Foreign key violation: {child}.{fk} has rows "
+                f"with no parent in {parent}.{pk}",
+            ))
+        raise_first_violation(checks)
+        return tables

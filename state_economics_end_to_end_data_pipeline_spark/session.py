@@ -18,7 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local task slots: $SPARK_GRAFT_CPUS, else the CPUs this process may run on
+LOCAL_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -29,12 +30,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
+    ``master`` defaults to ``local[LOCAL_CPUS]`` locally; on a real
     cluster callers pass ``None`` and let spark-submit decide.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    master = master or f"local[{LOCAL_CPUS}]"
+    shuffle_partitions = shuffle_partitions or LOCAL_CPUS
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -11,6 +11,8 @@ and the files under the injected repo root.
 from __future__ import annotations
 
 import json
+import os
+import subprocess
 import sys
 from pathlib import Path
 
@@ -105,3 +107,29 @@ def test_sf_mismatch_writes_suffixed_record(tmp_path):
         (out.parent / f"{out.stem}_sf0.001{out.suffix}").read_text()
     )
     assert side["sf"] == 0.001 and side["queries"] == {"a": 0.1}
+
+
+def test_cpus_stamp_is_the_local_core_count_used(tmp_path):
+    """The record's ``cpus`` is the local[N] the session ran on --
+    $SPARK_GRAFT_CPUS when set, else the CPUs this process may use -- not
+    the host's ``os.cpu_count()``. Each case imports bench in a fresh
+    interpreter, since the session module reads the variable once."""
+
+    def stamped(cpus_env):
+        root = tmp_path / f"cpus_{cpus_env}"
+        root.mkdir()
+        _setup(root)
+        env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+        if cpus_env:
+            env["SPARK_GRAFT_CPUS"] = cpus_env
+        subprocess.run(
+            [sys.executable, "-c",
+             "import json, sys; from pathlib import Path; import bench; "
+             "bench._persist_full_bench(json.loads(sys.argv[1]), Path(sys.argv[2]))",
+             json.dumps(_payload({"a": 1.0}, {"a": 1.0})), str(root)],
+            cwd=REPO_ROOT, env=env, check=True,
+        )
+        return json.loads((root / "docs" / "BENCH_LOCAL_r04.json").read_text())["cpus"]
+
+    assert stamped("3") == 3
+    assert stamped("") == len(os.sched_getaffinity(0))

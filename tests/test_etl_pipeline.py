@@ -12,6 +12,7 @@ from state_economics_end_to_end_data_pipeline_spark.pipelines.economics import (
     EconomicsETL,
 )
 from state_economics_end_to_end_data_pipeline_spark.operators.quality import (
+    check_primary_key,
     duplicate_keys,
     null_key_count,
 )
@@ -105,27 +106,130 @@ def test_min_wage_drops_unknown_jurisdictions(tables):
     assert mw.select("GeoFIPS").distinct().count() == 21  # the 21 fixture states
 
 
-def test_validate_outputs_catches_fk_violation(spark, tables):
-    """The integrity gate must reject a corrupted output set: planting an
-    orphan GeoFIPS in table_Unemployment (no parent in table_location)
-    raises naming that edge; the clean set passes (exercised by the
+def _plant(tables, **planted):
+    """The output set with each named table replaced by ``planted[name]``
+    applied to it."""
+    return {k: planted[k](v) if k in planted else v for k, v in tables.items()}
+
+
+def _null_geofips(df):
+    return df.unionByName(df.limit(1).withColumn("GeoFIPS", F.lit(None).cast("int")))
+
+
+def _dup_row(df):
+    return df.unionByName(df.limit(1))
+
+
+def _orphan_geofips(df):
+    return df.unionByName(df.limit(1).withColumn("GeoFIPS", F.lit(999999)))
+
+
+@pytest.mark.parametrize(
+    "planted, message",
+    [
+        (
+            {"table_Unemployment": _null_geofips},
+            "Primary key violation in table_Unemployment: 1 rows with null "
+            "in key columns ['GeoFIPS', 'Year']",
+        ),
+        (
+            {"table_gdp": _dup_row},
+            "Primary key violation in table_gdp: duplicate values for key "
+            "columns ['GeoFIPS', 'Year', 'Industry_Code']",
+        ),
+        # two breaks: the first in gate order is reported -- PKs in
+        # PRIMARY_KEYS order, nulls before duplicates, then FKs
+        (
+            {"table_Unemployment": _dup_row, "table_location": _null_geofips},
+            "Primary key violation in table_location: 1 rows with null in "
+            "key columns ['GeoFIPS']",
+        ),
+        (
+            {"table_Unemployment": lambda df: _null_geofips(_dup_row(df))},
+            "Primary key violation in table_Unemployment: 1 rows with null "
+            "in key columns ['GeoFIPS', 'Year']",
+        ),
+        (
+            {"table_Unemployment": _orphan_geofips, "table_inflation": _dup_row},
+            "Primary key violation in table_inflation: duplicate values for "
+            "key columns ['Year']",
+        ),
+    ],
+)
+def test_validate_outputs_reports_first_violation(tables, planted, message):
+    """The integrity gate rejects a corrupted output set with the message
+    of the first broken constraint; the clean set passes (exercised by the
     `tables` fixture itself, which runs with validate=True)."""
-    import pytest
-    from pyspark.sql import functions as F
+    with pytest.raises(ValueError) as err:
+        EconomicsETL.validate_outputs(_plant(tables, **planted))
+    assert str(err.value) == message
 
-    from state_economics_end_to_end_data_pipeline_spark.pipelines.economics import (
-        EconomicsETL,
+
+def test_validate_outputs_catches_fk_violation(tables):
+    """An orphan GeoFIPS planted in table_Unemployment (no parent in
+    table_location) is rejected, naming that edge."""
+    with pytest.raises(ValueError) as err:
+        EconomicsETL.validate_outputs(_plant(tables, table_Unemployment=_orphan_geofips))
+    assert str(err.value) == (
+        "Foreign key violation: table_Unemployment.GeoFIPS has rows with "
+        "no parent in table_location.GeoFIPS"
     )
 
-    corrupted = dict(tables)
-    orphan = (
-        tables["table_Unemployment"]
-        .limit(1)
-        .withColumn("GeoFIPS", F.lit(999999))
-    )
-    corrupted["table_Unemployment"] = tables["table_Unemployment"].unionByName(orphan)
-    with pytest.raises(ValueError, match="table_Unemployment.GeoFIPS"):
-        EconomicsETL.validate_outputs(corrupted)
+
+def test_check_primary_key_messages(spark):
+    """check_primary_key keeps the reference's messages, nulls first, on
+    top of the same one-action helper as the gate."""
+    df = spark.createDataFrame([(1, "a"), (1, "b"), (None, "c"), (None, "d")], "k int, v string")
+    with pytest.raises(ValueError) as err:
+        check_primary_key(df, ["k"])
+    assert str(err.value) == "Primary key violation in <df>: 2 rows with null in key columns ['k']"
+    with pytest.raises(ValueError) as err:
+        check_primary_key(df.dropna(), ["k"], table="t")
+    assert str(err.value) == "Primary key violation in t: duplicate values for key columns ['k']"
+    check_primary_key(df, ["v"], table="t")
+
+
+def test_validate_outputs_checks_in_one_query(spark, tables):
+    """All 16 constraints run as one query: beyond re-materializing the 11
+    tables, the gate's job group stays within 25 jobs, below what the 25
+    per-constraint actions would submit."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("test-gate", "validate_outputs")
+        EconomicsETL.validate_outputs(tables)
+        sc.setJobGroup("test-gate-materialize", "localCheckpoint only")
+        for df in tables.values():
+            df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    gate = len(tracker.getJobIdsForGroup("test-gate"))
+    materialize = len(tracker.getJobIdsForGroup("test-gate-materialize"))
+    assert gate - materialize <= 25, (gate, materialize)
+
+
+def test_validated_tables_are_materialized_without_leaks(spark, fixture_paths):
+    """run(validate=True) returns checkpoint scans, not the raw-file
+    lineage, and neither a passing nor a failing gate leaves an entry in
+    the CacheManager or changes the session's SQL conf."""
+
+    def sql_conf():
+        return {k: v for k, v in spark.conf.getAll.items() if k.startswith("spark.sql.")}
+
+    def cache_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    spark.catalog.clearCache()
+    conf = sql_conf()
+    tables = EconomicsETL(spark=spark, **fixture_paths).run(validate=True)
+    for name, df in tables.items():
+        plan = df._jdf.queryExecution().logical().toString()
+        assert plan.startswith("LogicalRDD"), f"{name}: {plan}"
+    assert cache_empty() and sql_conf() == conf
+
+    with pytest.raises(ValueError, match="table_gdp"):
+        EconomicsETL.validate_outputs(_plant(tables, table_gdp=_dup_row))
+    assert cache_empty() and sql_conf() == conf
 
 
 def test_publish_partitions_gdp_by_year_and_prunes(tables, spark, tmp_path):

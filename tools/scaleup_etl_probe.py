@@ -27,6 +27,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "perfbench"))
 
 SECTION_HEADER = "## ETL scale probe: full pipeline at ~1000x fixture"
 
@@ -43,6 +44,8 @@ def main() -> int:
     from state_economics_end_to_end_data_pipeline_spark.pipelines.economics import (
         EconomicsETL,
     )
+    from measure import tree_cpu_s  # CPU seconds of this process, the JVM and its workers
+
     from state_economics_end_to_end_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="etl-scale-probe")
@@ -56,17 +59,19 @@ def main() -> int:
     )
     print(f"# fixtures generated in {gen_s}s (~{raw_rows:,} csv lines)", file=sys.stderr)
 
-    t0 = time.perf_counter()
+    t0, c0 = time.perf_counter(), tree_cpu_s()
     etl = EconomicsETL(spark=spark, **paths)
     tables = etl.run(validate=True)  # PK + FK gate ON at scale
     counts = {k: v.count() for k, v in sorted(tables.items())}
     run_s = round(time.perf_counter() - t0, 1)
+    run_cpu_s = round(tree_cpu_s() - c0, 1)
     total_rows = sum(counts.values())
 
-    t0 = time.perf_counter()
+    t0, c0 = time.perf_counter(), tree_cpu_s()
     pub_root = tempfile.mkdtemp(prefix="etl_scale_pub_")
     etl.publish(tables, pub_root)
     publish_s = round(time.perf_counter() - t0, 1)
+    publish_cpu_s = round(tree_cpu_s() - c0, 1)
 
     # partition pruning on the Year-partitioned published fact: a
     # Year-filtered read must carry PartitionFilters and touch exactly
@@ -94,7 +99,9 @@ def main() -> int:
         "output_rows": total_rows,
         "gen_sec": gen_s,
         "etl_validate_sec": run_s,
+        "etl_validate_cpu_sec": run_cpu_s,
         "publish_sec": publish_s,
+        "publish_cpu_sec": publish_cpu_s,
         "year_partitions": len(year_dirs),
         "files_total": n_files_total,
         "files_one_year": n_files_pruned,
@@ -106,21 +113,23 @@ def main() -> int:
     md = [
         SECTION_HEADER,
         "",
-        "Generated by `python tools/scaleup_etl_probe.py` (local[32]).",
+        f"Generated by `python tools/scaleup_etl_probe.py` "
+        f"(local[{spark.sparkContext.defaultParallelism}]).",
         f"Fixture: reference-shaped rawfiles at n_states={args.n_states:,}",
         "(same banner/footer rows, (D)/(L)/(NA) sentinels, cp1252 bytes,",
         "'$'-strings -- only the jurisdiction list grows), i.e.",
         f"~{row['scale_vs_golden']}x the 9,278-row golden-test corpus.",
         "`etl sec` includes the FULL PK+FK validation gate (the",
         "reference never validates its declared FKs; this engine always",
-        "does, including at scale).",
+        "does, including at scale) and a count of each returned table.",
+        "CPU seconds are the process tree's: driver, JVM and workers.",
         "",
-        "| n_states | output rows | scale | gen sec | etl+validate sec "
-        "| publish sec | Year dirs | files: all -> 1-Year read |",
+        "| n_states | output rows | scale | gen sec | etl+validate sec (CPU) "
+        "| publish sec (CPU) | Year dirs | files: all -> 1-Year read |",
         "|---|---|---|---|---|---|---|---|",
         f"| {args.n_states:,} | {total_rows:,} | {row['scale_vs_golden']}x "
-        f"| {gen_s} | {run_s} | {publish_s} | {len(year_dirs)} "
-        f"| {n_files_total} -> {n_files_pruned} |",
+        f"| {gen_s} | {run_s} ({run_cpu_s}) | {publish_s} ({publish_cpu_s}) "
+        f"| {len(year_dirs)} | {n_files_total} -> {n_files_pruned} |",
         "",
         "Reading: the golden-test wall (~22s at 1x) is session/overhead-",
         "dominated; this row shows the distributed cost growing far",
