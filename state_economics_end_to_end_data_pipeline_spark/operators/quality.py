@@ -95,16 +95,11 @@ def fk_orphans(
     parent (NULL FKs are not orphans -- SQL FK semantics). A left-anti
     equi-join, so at scale it is one hash join keyed on the FK; when the
     parent key set is dimension-sized Spark broadcasts it and the check
-    is a single narrow pass over the child."""
-    from pyspark.sql import functions as F
-
-    return (
-        child.filter(F.col(child_key).isNotNull())
-        .join(
-            parent.select(F.col(parent_key).alias(child_key)).distinct(),
-            child_key,
-            "left_anti",
-        )
+    is a single narrow pass over the child. Duplicate parent keys cannot
+    change an anti join's output, so the parent side is not deduplicated
+    (a distinct there would only add an aggregate exchange)."""
+    return child.filter(F.col(child_key).isNotNull()).join(
+        parent.select(F.col(parent_key).alias(child_key)), child_key, "left_anti"
     )
 
 

@@ -48,6 +48,30 @@ GDP_ID_COLS = [
     "IndustryClassification", "Description", "Unit",
 ]
 
+# The min-wage CSV's 15 columns, named as in its header: declared so the
+# refresh runs no schema-inference jobs. The 11 wage/CPI columns are
+# double; the "Uncleaned" ranges and the footnotes stay strings.
+MIN_WAGE_SCHEMA = T.StructType([
+    T.StructField(name, dtype)
+    for name, dtype in [
+        ("Year", T.IntegerType()),
+        ("State", T.StringType()),
+        ("State.Minimum.Wage", T.DoubleType()),
+        ("State.Minimum.Wage.2020.Dollars", T.DoubleType()),
+        ("Federal.Minimum.Wage", T.DoubleType()),
+        ("Federal.Minimum.Wage.2020.Dollars", T.DoubleType()),
+        ("Effective.Minimum.Wage", T.DoubleType()),
+        ("Effective.Minimum.Wage.2020.Dollars", T.DoubleType()),
+        ("CPI.Average", T.DoubleType()),
+        ("Department.Of.Labor.Uncleaned.Data", T.StringType()),
+        ("Department.Of.Labor.Cleaned.Low.Value", T.DoubleType()),
+        ("Department.Of.Labor.Cleaned.Low.Value.2020.Dollars", T.DoubleType()),
+        ("Department.Of.Labor.Cleaned.High.Value", T.DoubleType()),
+        ("Department.Of.Labor.Cleaned.High.Value.2020.Dollars", T.DoubleType()),
+        ("Footnote", T.StringType()),
+    ]
+])
+
 # PK contract mirrored from the reference's check_primary_key call sites
 # (DAG1:91,92,121,122,123,145,146,172-175) -- 9 of the 11 tables.
 PRIMARY_KEYS: dict[str, list[str]] = {
@@ -149,7 +173,7 @@ class EconomicsETL:
     def load_min_wage(self) -> DataFrame:
         """DAG1:53-59 -- Windows-1252 CSV, encoding sniffed from a byte
         prefix (S2). Column names contain dots; normalized to underscores."""
-        df = read_csv(self.spark, self.min_wage_csv, sniff=True)
+        df = read_csv(self.spark, self.min_wage_csv, schema=MIN_WAGE_SCHEMA, sniff=True)
         return normalize_column_names(df)
 
     # ---------------- transform ----------------

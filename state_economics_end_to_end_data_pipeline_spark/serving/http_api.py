@@ -17,20 +17,32 @@ Routes:
 - ``GET  /columns/<table>``             -> V3 column introspection
 
 Scale note: the serving path is limit-bounded by construction
-(``DataService.MAX_LIMIT``); the Spark job behind a request is a
-``limit(n)`` scan -- no full-table collect can be expressed through
-this surface. The server is threaded (each request is a tiny Spark
-action; the session is thread-safe for reads).
+(``DataService.MAX_LIMIT``); a request is answered from the snapshot
+``DataService.register`` took, so no request submits a Spark job and no
+full-table collect can be expressed through this surface. The server is
+threaded; a request only reads its table's snapshot. Dates and
+timestamps go out as ISO-8601 strings, decimals as strings (exact).
 """
 
 from __future__ import annotations
 
 import json
 import threading
+from datetime import date
+from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import unquote
 
 from .service import DataService
+
+
+def _json_default(value):
+    """``json.dumps`` hook for the Spark types JSON has no literal for."""
+    if isinstance(value, date):  # datetime is a date subclass
+        return value.isoformat()
+    if isinstance(value, Decimal):
+        return str(value)
+    raise TypeError(f"{type(value).__name__} is not JSON serializable")
 
 
 def _handler_for(service: DataService):
@@ -40,7 +52,7 @@ def _handler_for(service: DataService):
             pass
 
         def _send(self, code: int, payload) -> None:
-            body = json.dumps(payload).encode()
+            body = json.dumps(payload, default=_json_default).encode()
             self.send_response(code)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))

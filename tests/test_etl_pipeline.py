@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from state_economics_end_to_end_data_pipeline_spark.pipelines.economics import (
+    MIN_WAGE_SCHEMA,
     PRIMARY_KEYS,
     EconomicsETL,
 )
@@ -104,6 +105,15 @@ def test_min_wage_drops_unknown_jurisdictions(tables):
     """Guam/PR/USVI are not in the location dim -> inner join drops them."""
     mw = tables["table_state_min_wage"]
     assert mw.select("GeoFIPS").distinct().count() == 21  # the 21 fixture states
+
+
+def test_min_wage_schema_matches_inferred(spark, fixture_paths):
+    """The declared min-wage schema is the one inference would find on the
+    reference-shaped fixture, so declaring it changes no column type."""
+    from state_economics_end_to_end_data_pipeline_spark.io.readers import read_csv
+
+    inferred = read_csv(spark, fixture_paths["min_wage_csv"], sniff=True).schema
+    assert MIN_WAGE_SCHEMA == inferred
 
 
 def _plant(tables, **planted):

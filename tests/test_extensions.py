@@ -21,7 +21,8 @@ from state_economics_end_to_end_data_pipeline_spark.operators.multimodal import 
 from state_economics_end_to_end_data_pipeline_spark.operators.partitioning import (
     rebalance_for_cpu,
 )
-from state_economics_end_to_end_data_pipeline_spark.serving import DataService
+from state_economics_end_to_end_data_pipeline_spark.serving import DataServer, DataService
+from state_economics_end_to_end_data_pipeline_spark.serving.service import MAX_LIMIT
 from state_economics_end_to_end_data_pipeline_spark.streaming import (
     read_events_stream,
     run_available_now,
@@ -218,6 +219,112 @@ def test_data_service_rejects_bad_input(spark):
         svc.get_data("t", limit="10")
     with pytest.raises(ValueError):
         svc.register("bad-name", None)
+
+
+def _jobs_in_group(spark, group, fn) -> int:
+    """Run ``fn`` under a job group; the number of Spark jobs it submitted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_served_requests_submit_no_spark_jobs(spark, sf_dir):
+    """Registration snapshots the table; the V1-V3 calls after it read
+    the snapshot and submit no Spark job."""
+    svc = DataService(spark)
+    path = f"{sf_dir}/nation.parquet"
+    assert _jobs_in_group(spark, "serving-register", lambda: svc.register_parquet("nation", path)) >= 1
+
+    def requests():
+        for limit in (1, 10, MAX_LIMIT):
+            svc.get_data("nation", limit)
+        svc.columns("nation")
+        svc.list_tables()
+
+    assert _jobs_in_group(spark, "serving-requests", requests) == 0
+
+
+@pytest.fixture(scope="module")
+def published(spark, fixture_paths, tmp_path_factory):
+    """The economics ETL's 11 tables, validated and published as parquet."""
+    from state_economics_end_to_end_data_pipeline_spark.pipelines.economics import (
+        EconomicsETL,
+    )
+
+    tables = EconomicsETL(spark=spark, **fixture_paths).run(validate=True)
+    return EconomicsETL.publish(tables, str(tmp_path_factory.mktemp("published")))
+
+
+@pytest.mark.parametrize("table", ["table_gdp", "table_school_expenses"])
+def test_snapshot_rows_equal_limit_query(spark, published, table):
+    """On the Year-partitioned, multi-file published facts, the first n
+    snapshot rows are exactly what ``limit(n).collect()`` returns."""
+    df = spark.read.parquet(published[table])
+    assert len(df.inputFiles()) > 1
+    svc = DataService(spark)
+    svc.register(table, df)
+    for n in (1, 10, 1000, MAX_LIMIT):
+        out = svc.get_data(table, n)
+        assert out["columns"] == df.columns
+        assert out["rows"] == [r.asDict() for r in df.limit(n).collect()], n
+
+
+def test_served_payload_mutation_does_not_leak(spark):
+    svc = DataService(spark)
+    svc.register("t", spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    first = svc.get_data("t", 2)
+    first["rows"][0]["v"] = "mutated"
+    first["rows"].append({"k": 3, "v": "c"})
+    first["columns"].append("extra")
+    svc.columns("t").append("extra")
+    assert svc.get_data("t", 2) == {
+        "table": "t", "columns": ["k", "v"], "rows": [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}],
+    }
+    assert svc.columns("t") == ["k", "v"]
+
+
+def test_reregistering_serves_the_new_data(spark):
+    svc = DataService(spark)
+    svc.register("t", spark.createDataFrame([(1,)], "k int"))
+    svc.register("t", spark.createDataFrame([(7, "x"), (8, "y")], "id int, s string"))
+    assert svc.list_tables() == ["t"]
+    assert svc.columns("t") == ["id", "s"]
+    assert svc.get_data("t", 10)["rows"] == [{"id": 7, "s": "x"}, {"id": 8, "s": "y"}]
+
+
+def test_http_serves_dates_and_decimals_as_strings(spark, sf_dir):
+    """POST /get_data on tables with timestamp, date and decimal columns
+    answers 200: dates and timestamps as ISO-8601, decimals as strings."""
+    import json
+    from datetime import datetime
+    from urllib.request import Request, urlopen
+
+    svc = DataService(spark)
+    svc.register("orders", read_parquet_table(spark, sf_dir, "orders"))
+    svc.register(
+        "typed",
+        spark.sql("SELECT DATE'2021-03-04' AS d, CAST(1.10 AS DECIMAL(5, 2)) AS amount"),
+    )
+    want = svc.get_data("orders", 2)["rows"]
+    with DataServer(svc) as srv:
+        host, port = srv.address
+
+        def post(table, limit):
+            body = json.dumps({"table": table, "limit": limit}).encode()
+            with urlopen(Request(f"http://{host}:{port}/get_data", data=body), timeout=60) as r:
+                assert r.status == 200
+                return json.load(r)
+
+        rows = post("orders", 2)["rows"]
+        assert [datetime.fromisoformat(r["o_orderdate"]) for r in rows] == [
+            r["o_orderdate"] for r in want
+        ]
+        assert post("typed", 1)["rows"] == [{"d": "2021-03-04", "amount": "1.10"}]
 
 
 # ------------------------------------------------------- dedup / rebalance
@@ -434,6 +541,26 @@ def test_fk_orphans_detects_planted_orphan(spark):
     assert [r["id"] for r in orphans] == [12]  # 99 orphaned; NULL ignored
     clean = fk_orphans(child.filter("id < 12"), parent, "fk", "pk")
     assert clean.count() == 0
+
+
+def test_fk_orphans_ignores_duplicate_parent_keys(spark):
+    """An anti join's output does not depend on how often a parent key
+    repeats: a parent with duplicated keys gives the same orphans, and a
+    NULL foreign key is still not an orphan."""
+    from state_economics_end_to_end_data_pipeline_spark.operators.quality import (
+        fk_orphans,
+    )
+
+    parent = spark.createDataFrame([(1,), (2,)], "pk bigint")
+    duplicated = parent.unionAll(parent).unionAll(spark.createDataFrame([(2,)], "pk bigint"))
+    child = spark.createDataFrame(
+        [(10, 1), (11, 2), (12, 99), (13, None), (14, 99)], "id bigint, fk bigint"
+    )
+
+    def orphan_ids(p):
+        return sorted(r["id"] for r in fk_orphans(child, p, "fk", "pk").collect())
+
+    assert orphan_ids(duplicated) == orphan_ids(parent) == [12, 14]
 
 
 def test_bloom_no_false_negatives_and_prunes(spark):
