@@ -16,6 +16,9 @@ Design rules:
 
 from __future__ import annotations
 
+import hashlib
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -218,7 +221,7 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
         schema = spark.read.parquet(path).schema
         # reserved-prefix view name, unique per path (several sf_dirs
         # can carry the same table name within one app)
-        view = f"__sg_scan_{name}_{abs(hash(path)) % 10**12}"
+        view = f"__sg_scan_{name}_{hashlib.md5(path.encode()).hexdigest()}"
         _register_scan_view(spark, path, schema, view)
         memo = (schema, nanos_cols, view)
         _SCAN_MEMO[(app_id, path)] = memo
@@ -230,7 +233,7 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     _apply_scan_confs(spark, bool(nanos_cols))
     try:
         df = spark.table(view)
-    except Exception:
+    except AnalysisException:
         # temp views are SESSION-scoped while the memo is app-scoped: a
         # second session sharing the app registers its own copy
         _register_scan_view(spark, path, schema, view)

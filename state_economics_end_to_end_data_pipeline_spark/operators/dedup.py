@@ -20,11 +20,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import planhook
-from .partitioning import stage_loop_edges
+from .loops import fixpoint, materialize, staged
 from .text import tokens, word_ngrams
 
 
@@ -461,83 +460,65 @@ def simhash_table(
     )
 
 
-def cluster_labels(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+_CLUSTER_CAP = 20  # near-dup clusters are shallow: a handful of rounds
+
+
+def cluster_labels(pairs: DataFrame) -> DataFrame:
     """Connected components over candidate duplicate pairs: min-label
     propagation to fixpoint. Returns (id, label) where label is the
     cluster's minimum member id (the canonical survivor).
 
     Iterative (non-SQL-expressible at scale): each round is one join +
     min-aggregate, O(cluster diameter) rounds -- near-dup clusters are
-    shallow, so a handful. ``localCheckpoint`` truncates lineage each
-    round (the plan would otherwise grow exponentially); the driver-side
-    convergence check is O(1) per round.
+    shallow, so a handful; a cluster still changing after
+    ``_CLUSTER_CAP`` rounds raises instead of returning unconverged
+    labels.  Each round is checkpointed (the plan would otherwise grow
+    exponentially).
 
-    r14 round-body diet (same treatment as graph_analytics'
-    _min_label_components, labels verified bit-identical):
+    Round body (same treatment as graph_analytics'
+    _min_label_components, labels bit-identical):
 
-    - SELF-LOOPS in the checkpointed edge list make the per-round
+    - SELF-LOOPS in the staged edge list make the per-round
       groupBy(src).min(label) cover each node's own label, so the
-      propagate step is ONE equi-join + aggregate -- the old shape
-      needed a second left join of labels against the propagated mins.
+      propagate step is ONE equi-join + aggregate.
     - Convergence uses the monotone potential (labels only ever
       decrease under min-propagation, so SUM(label) strictly decreases
       until fixpoint; decimal(38,0) so a wrapped bigint sum can never
-      fake convergence), measured by ``observe`` on the SAME job that
-      materializes the round's checkpoint -- the old shape paid a
-      separate join-old-vs-new + count action per round.
-    - The edge list is hash-partitioned by ``dst`` (the per-round join
-      key) and CACHED (r15): ``InMemoryTableScanExec`` preserves
-      ``outputPartitioning``, so rounds shuffle only the narrow
-      (id, label) relation, never the edges.  (r14 used repartition +
-      localCheckpoint, but checkpointed LogicalRDDs report
-      UnknownPartitioning -- the plans/r14 dumps refuted the elision;
-      the cache is the pattern that provably plan-preserves it.  The
-      cache is unpersisted before return -- per-call staging.)"""
-    # stage the edge list ONCE -- every iteration joins against it,
-    # and without this the whole upstream pipeline (e.g. MinHash -> LSH)
-    # would re-execute per round.  Self-loops ride along (id as both
-    # ends) so the propagate aggregate includes each node's own label.
+      fake convergence), observed on the SAME job that materializes the
+      round's checkpoint.
+    - The edge list is staged by ``dst`` (the per-round join key), so
+      rounds shuffle only the narrow (id, label) relation, never the
+      edges, and the upstream pipeline (e.g. MinHash -> LSH) runs once."""
     directed = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    edges = (
-        directed.union(
-            directed.select(F.col("src").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-    )
-    edges = stage_loop_edges(edges, "dst")
-    # star-collapse initialization: label = min(id, direct neighbors).
-    # Resolves star/clique shapes immediately; chains converge in
-    # O(log diameter)-ish rounds instead of O(diameter).  (Self-loops
-    # make min(dst) already include id, so the least() is folded in.)
-    pot_expr = F.sum(F.col("label").cast("decimal(38,0)")).alias("pot")
-    obs0 = Observation()
-    labels = (
-        edges.groupBy(F.col("src").alias("id"))
-        .agg(F.min("dst").alias("label"))
-        .observe(obs0, pot_expr)
-        .localCheckpoint()
-    )
-    potential = obs0.get["pot"]
-    try:
-        for _ in range(max_iter):
-            obs = Observation()
+    edges = directed.union(
+        directed.select(F.col("src").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+    pot = F.sum(F.col("label").cast("decimal(38,0)"))
+    with staged(edges, "dst") as edges:
+
+        def step(labels, _pot):
             stepped = (
                 edges.join(labels, edges.dst == labels.id)
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.min("label").alias("label"))
             )
-            planhook.emit("cluster_labels_round", stepped)
-            new_labels = stepped.observe(obs, pot_expr).localCheckpoint()
-            new_potential = obs.get["pot"]
-            labels = new_labels
-            if new_potential == potential:
-                break
-            potential = new_potential
-        return labels
-    finally:
-        edges.unpersist()
+            return materialize("cluster_labels_round", stepped, pot)
+
+        # star-collapse initialization: label = min(id, direct neighbors)
+        # resolves star/clique shapes immediately (self-loops make
+        # min(dst) already include id)
+        start = edges.groupBy(F.col("src").alias("id")).agg(
+            F.min("dst").alias("label")
+        )
+        labels, _ = fixpoint(
+            "cluster_labels",
+            step,
+            materialize("cluster_labels_start", start, pot),
+            _CLUSTER_CAP,
+        )
+    return labels
 
 
 def dedup_survivors(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

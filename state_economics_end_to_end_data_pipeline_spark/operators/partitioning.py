@@ -1,4 +1,4 @@
-"""Partition-shape helpers and loop-edge staging.
+"""Partition-shape helpers.
 
 The CPU-bound narrow operators (minhash, simhash, fingerprints, decode
 UDFs) are only as parallel as their input splits. A small parquet file
@@ -12,57 +12,9 @@ corpus-wide shuffle where the file layout is already parallel.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
-
-# How iterative entries stage their loop-invariant edge relation, keyed
-# by the per-round join key (``$SPARK_GRAFT_EDGE_STAGING``):
-#
-# - ``cache`` (default): ``repartition(key).sortWithinPartitions(key)
-#   .cache()``.  InMemoryTableScanExec plan-preserves BOTH
-#   outputPartitioning and outputOrdering, so every round's join on the
-#   key is exchange-free AND sort-free on the edge side (non-broadcast
-#   round plan: SortMergeJoin reading the InMemoryTableScan directly --
-#   plans/r15/*_nobroadcast.txt) -- at 100 TB the difference between
-#   shuffling+sorting O(edges) once and once per round.  Cost at bench
-#   scale: AQE materializes the cache read as its own query stage (1-2
-#   extra driver-scheduled jobs per round, measured ~0.3-0.5 s per
-#   sf0.1 entry; the staging sort itself is a wash) -- noise at scale,
-#   where one elided edge exchange dwarfs a job submission.
-# - ``ckpt_noaqe``: ``repartition(key).localCheckpoint()`` built with
-#   AQE disabled for the staging statement only.  The LogicalRDD then
-#   reports the hash partitioning too (under AQE it degrades to
-#   UnknownPartitioning -- the r14 dumps), with a plain RDD scan instead
-#   of a columnar cache read per round.
-# - ``ckpt``: the r14 shape (localCheckpoint under AQE).  Partitioning
-#   is NOT preserved; kept for A/B reference only.
-_EDGE_STAGE_MODE = os.environ.get("SPARK_GRAFT_EDGE_STAGING", "cache")
-
-
-def stage_loop_edges(df: DataFrame, key: str) -> DataFrame:
-    """Stage a loop-invariant relation hash-partitioned by ``key`` (the
-    per-round join/aggregate key) per ``_EDGE_STAGE_MODE`` above.
-
-    In ``cache`` mode the caller owns the lifecycle: ``unpersist()``
-    when the loop's result no longer references the staged relation
-    (per-call staging inside a query -- never cross-run state).  In the
-    checkpoint modes ``unpersist()`` is a no-op, so callers can call it
-    unconditionally."""
-    mode = _EDGE_STAGE_MODE
-    if mode == "cache":
-        return df.repartition(key).sortWithinPartitions(key).cache()
-    if mode == "ckpt_noaqe":
-        spark = df.sparkSession
-        old = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return df.repartition(key).localCheckpoint()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", old)
-    return df.repartition(key).localCheckpoint()
-
 
 # Per-(application, analyzed-plan semanticHash) memo of a plan's scan
 # partition count.  ``df.rdd.getNumPartitions()`` runs full physical

@@ -12,12 +12,13 @@ doubles (float addition order is partition-dependent otherwise).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from contextlib import ExitStack
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.readers import read_parquet_table as t
-from ..operators import planhook
-from ..operators.partitioning import stage_loop_edges
+from ..operators.loops import fixpoint, materialize, staged
 from . import register
 
 _DAMP = 0.85
@@ -171,40 +172,29 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     skip this entry (it is the catalog's one traversal-at-build entry
     alongside mad_per_group_approx's documented build-time action).
     """
-    # r14: src-partitioned staging -- the src-keyed per-round consumers
-    # (joins/aggregates on edges.src) reuse the preserved partitioning
-    # exchange-free.  r15: staged via stage_loop_edges (default: CACHE,
-    # which plan-preserves the hash(src) partitioning; the r14
-    # localCheckpoint did not -- its LogicalRDD reported
-    # UnknownPartitioning in the committed dumps).
-    edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    root = (
-        deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
-        .limit(1)
-        .select(F.col("src").alias("node"))
-    )
-    visited = root.select("node", F.lit(0).alias("hops")).localCheckpoint()
-    frontier = visited.select("node")
-    for h in range(1, _BFS_MAX_HOPS + 1):
-        step = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-            .select("node", F.lit(h).alias("hops"))
+    # src-staged: the src-keyed per-round join reads the cache exchange-free
+    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        root = (
+            deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
+            .limit(1)
+            .select(F.col("src").alias("node"))
         )
-        planhook.emit("graph_bfs_hops_round", step)
-        nxt = step.localCheckpoint()
-        # r14: the visited set is a LAZY union -- every child is already
-        # a checkpointed LogicalRDD, so referencing it per round costs a
-        # linear union scan, never subtree recompute; the old per-round
-        # re-checkpoint of the whole union was one extra materialization
-        # job per hop (the exponential-duplication hazard the per-round
-        # checkpoint exists for lives in nxt, which stays checkpointed)
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("node")
-    edges.unpersist()
+        visited = root.select("node", F.lit(0).alias("hops")).localCheckpoint()
+        frontier = visited.select("node")
+        for h in range(1, _BFS_MAX_HOPS + 1):
+            step = (
+                frontier.join(edges, frontier.node == edges.src)
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited, "node", "left_anti")
+                .select("node", F.lit(h).alias("hops"))
+            )
+            nxt = materialize("graph_bfs_hops_round", step)
+            # the visited set is a LAZY union of checkpoints: referencing it
+            # per round is a linear union scan, never a subtree recompute
+            visited = visited.unionByName(nxt)
+            frontier = nxt.select("node")
     return visited.groupBy(F.col("hops").cast("bigint").alias("hops")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )
@@ -234,36 +224,37 @@ def pagerank_parts_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct + self-join duplicate of _copurchase_edges at threshold=3
     edges = _copurchase_edges(spark, sf_dir, threshold=3)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # r14 (guide §2.4): outdeg is round-invariant, so it is folded onto
-    # the cached edge relation ONCE instead of re-joined inside every
-    # iteration -- each round is now exactly one join (ranks onto the
-    # weighted edges), not two.  The per-edge rank/outdeg decimal
-    # arithmetic is unchanged, so the trajectory stays bit-identical.
-    ewd = edges.join(deg, "src").cache()
-    nodes = ewd.select(F.col("src").alias("node")).distinct().cache()
-    n_nodes = nodes.count()  # scalar: sizes the teleport term, O(1) result
-
-    ranks = nodes.select("node", (F.lit(1.0) / n_nodes).alias("rank"))
-    for _ in range(3):
-        contrib = (
-            ewd.join(ranks, ewd.src == ranks.node)
-            .groupBy("dst")
-            .agg(
-                F.sum((F.col("rank") / F.col("outdeg")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("contrib")
+    # outdeg is round-invariant, so it is folded onto the staged edge
+    # relation ONCE: each round is exactly one join (ranks onto the
+    # weighted edges).  The small result is checkpointed inside the scope,
+    # so nothing returned reads the caches.
+    with staged(edges.join(deg, "src"), "src") as ewd, staged(
+        ewd.select(F.col("src").alias("node")).distinct(), "node"
+    ) as nodes:
+        n_nodes = nodes.count()  # scalar: sizes the teleport term, O(1) result
+        ranks = nodes.select("node", (F.lit(1.0) / n_nodes).alias("rank"))
+        for _ in range(3):
+            contrib = (
+                ewd.join(ranks, ewd.src == ranks.node)
+                .groupBy("dst")
+                .agg(
+                    F.sum((F.col("rank") / F.col("outdeg")).cast("decimal(38,18)"))
+                    .cast("double")
+                    .alias("contrib")
+                )
             )
-        )
-        ranks = nodes.join(
-            contrib, nodes.node == contrib.dst, "left_outer"
-        ).select(
-            "node",
-            (
-                F.lit((1 - _DAMP) / n_nodes)
-                + F.lit(_DAMP) * F.coalesce(F.col("contrib"), F.lit(0.0))
-            ).alias("rank"),
-        )
-    return ranks.select(F.col("node").alias("part"), F.round("rank", 12).alias("rank"))
+            ranks = nodes.join(
+                contrib, nodes.node == contrib.dst, "left_outer"
+            ).select(
+                "node",
+                (
+                    F.lit((1 - _DAMP) / n_nodes)
+                    + F.lit(_DAMP) * F.coalesce(F.col("contrib"), F.lit(0.0))
+                ).alias("rank"),
+            )
+        return ranks.select(
+            F.col("node").alias("part"), F.round("rank", 12).alias("rank")
+        ).localCheckpoint()
 
 
 def _ppr_iter_sql(prev: str, out: str) -> str:
@@ -598,17 +589,11 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     edges = _copurchase_edges(spark, sf_dir, threshold=2).localCheckpoint()
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    rounds = [0]
-
-    def bump() -> None:
-        rounds[0] += 1
-
     # the propagation loop itself lives in _min_label_components (ONE
-    # implementation, shared with kcore_parts' chain resolution): min-
-    # label + pointer doubling, decimal monotone-potential convergence,
-    # per-round localCheckpoint, loud cap exhaustion
-    labels = _min_label_components(nodes, edges, bump, cap=_CC_MAX_ROUNDS)
-    LAST_ROUNDS["graph_connected_components"] = rounds[0]
+    # implementation, shared with kcore_parts' chain resolution)
+    labels, LAST_ROUNDS["graph_connected_components"] = _min_label_components(
+        nodes, edges, cap=_CC_MAX_ROUNDS
+    )
     return labels.groupBy(F.col("comp").cast("bigint").alias("component_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )
@@ -636,8 +621,8 @@ def _mg_degrees(edges: DataFrame) -> DataFrame:
 
 
 def _min_label_components(
-    nodes: DataFrame, both: DataFrame, bump, cap: int = _CHAIN_CC_CAP
-) -> DataFrame:
+    nodes: DataFrame, both: DataFrame, cap: int = _CHAIN_CC_CAP
+) -> tuple[DataFrame, int]:
     """Min-label connected components with pointer doubling: each round
     every node takes the min of its own and its neighbors' labels, then
     chases one level of label indirection (comp'' = min(comp',
@@ -646,63 +631,26 @@ def _min_label_components(
     ``graph_connected_components`` is a thin wrapper over it, and
     ``kcore_parts`` calls it as the chain-resolution subroutine of the
     compress step.  ``nodes`` is (node); ``both`` is the directed edge
-    list (src, dst), both directions present; returns (node, comp) with
-    comp = the component's minimum node id.  Convergence is the
-    monotone-potential discipline (decimal SUM of labels strictly
-    decreases until fixpoint -- decimal(38,0) so wrapped bigint sums can
-    never fake convergence); each round is localCheckpoint-materialized
-    (iterative-loop discipline, see graph_bfs_hops).  ``bump()`` fires
-    once per round that CHANGED labels -- the LAST_ROUNDS convention
-    every iterative entry shares, so depth-probe round counts compare
-    like with like.  Cap exhaustion raises rather than returning
-    partially-propagated labels.
+    list (src, dst), both directions present and no self-loops; returns
+    ``((node, comp), rounds)`` with comp = the component's minimum node
+    id and rounds = the rounds that CHANGED labels.  Convergence is the
+    monotone potential: the decimal SUM of labels strictly decreases
+    until fixpoint (decimal(38,0), so a wrapped bigint sum can never
+    fake convergence).
 
-    r14 round-body optimization (guide §2.4, measured cur 4.4s -> lean
-    2.8s warm at sf0.1, labels bit-identical, same round count):
-
-    - SELF-LOOPS fold the own-label min into the neighbor-min: with a
-      (node, node) edge per node unioned into the edge list, the
-      groupBy(dst).min(comp) already covers every node's own label, so
-      the separate labels-side left_outer join + ``least`` disappears
-      -- one equi-join per round instead of two.  The self-loop union
-      adds O(nodes) rows to the checkpointed edge list, negligible
-      against O(edges).
-    - The convergence potential rides the SAME job as the round's
-      ``localCheckpoint`` via ``observe`` (the checkpoint materializes
-      every row anyway; the old separate ``agg().collect()`` was one
-      extra job per round).
-    - The edge list is hash-repartitioned by ``src`` and CACHED (r15):
-      ``InMemoryTableScanExec`` preserves ``outputPartitioning``, so
-      each round's join shuffles only the (node, comp) labels relation,
-      never the edges (at 100 TB the edge relation dominates: this is
-      the difference between shuffling O(edges) once and once per
-      round).  r14 used repartition+localCheckpoint here, but the
-      committed plans/r14 dumps showed the checkpointed ``LogicalRDD``
-      reports ``UnknownPartitioning(0)`` -- the claimed exchange
-      elision did not exist as implemented; the cache is the pattern
-      that provably plan-preserves it (pagerank's ``ewd``; loop-body
-      dump in plans/r15/).  The cache is unpersisted before return --
-      per-call staging inside the query, never cross-run state."""
+    Round body: SELF-LOOPS unioned into the staged edge list make the
+    groupBy(dst).min(comp) cover every node's own label, so a round is
+    one equi-join, not two; the initial labels are those self-loops read
+    back from the staged edges.  The edges are staged by ``src``, so
+    rounds shuffle only the narrow (node, comp) relation, never the
+    edges."""
     selfloops = nodes.select(
         F.col("node").alias("src"), F.col("node").alias("dst")
     )
-    e = stage_loop_edges(both.unionByName(selfloops), "src")
-    pot_expr = F.sum(F.col("comp").cast("decimal(38,0)")).alias("pot")
-    obs0 = Observation()
-    # r14: initial labels derive from e's MATERIALIZED self-loops (one
-    # narrow scan of the cached edges) instead of re-running the nodes
-    # aggregate a second time -- requires ``both`` to be loop-free
-    # (src != dst on every row), which both callers' edge builders
-    # guarantee (strict src<dst pair enumeration, both directions)
-    labels = (
-        e.filter(F.col("src") == F.col("dst"))
-        .select(F.col("src").alias("node"), F.col("src").alias("comp"))
-        .observe(obs0, pot_expr)
-        .localCheckpoint()
-    )
-    potential = obs0.get["pot"]
-    try:
-        for _ in range(cap):
+    pot = F.sum(F.col("comp").cast("decimal(38,0)"))
+    with staged(both.unionByName(selfloops), "src") as e:
+
+        def step(labels, _pot):
             stepped = (
                 e.join(labels, e.src == labels.node)
                 .groupBy(F.col("dst").alias("node"))
@@ -711,26 +659,20 @@ def _min_label_components(
             lookup = stepped.select(
                 F.col("node").alias("ptr_node"), F.col("comp").alias("ptr_comp")
             )
-            obs = Observation()
             nxt = stepped.join(
                 lookup, stepped.comp == lookup.ptr_node, "left_outer"
             ).select("node", F.least("comp", "ptr_comp").alias("comp"))
-            planhook.emit("min_label_components_round", nxt)
-            labels = nxt.observe(obs, pot_expr).localCheckpoint()
-            new_potential = obs.get["pot"]
-            if new_potential == potential:
-                return labels
-            bump()
-            potential = new_potential
-        raise RuntimeError(
-            "_min_label_components: potential still decreasing after "
-            f"{cap} rounds -- component diameter exceeds the cap; raise it "
-            "rather than accept unconverged labels"
+            return materialize("min_label_components_round", nxt, pot)
+
+        start = e.filter(F.col("src") == F.col("dst")).select(
+            F.col("src").alias("node"), F.col("src").alias("comp")
         )
-    finally:
-        # kcore_parts calls this per compress step: the per-call edge
-        # cache must not accumulate across calls (async: no extra job)
-        e.unpersist()
+        return fixpoint(
+            "_min_label_components",
+            step,
+            materialize("min_label_components_start", start, pot),
+            cap,
+        )
 
 
 @register(
@@ -826,13 +768,13 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     susp = spark.createDataFrame([], schema="node bigint, eid string")
     done = spark.createDataFrame([], schema="part_key bigint, core_degree bigint")
-    rounds = [0]
+    count = F.count(F.lit(1))
 
-    def bump() -> None:
-        rounds[0] += 1
-
-    rakes = 0
-    for _ in range(_KCORE_MACRO_CAP):
+    # the macro-round's value is the running round count (rakes +
+    # contractions + changing chain rounds): it stops changing exactly
+    # when a rake finds nothing dead
+    def macro_round(state, rounds):
+        edges, susp, done, rakes = state
         # RAKE: one peel round over multigraph degrees.  No broadcast
         # hint on the dead set -- O(nodes) in early rounds; AQE
         # broadcasts at runtime once it actually shrinks.  A rake
@@ -840,45 +782,36 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # current multigraph IS the k-core -- stop WITHOUT contracting
         # any remaining degree-2 chains (they are core chains;
         # contraction is pure acceleration, never needed at fixpoint).
-        # r14: the emptiness probes ride each checkpoint's own job via
-        # ``observe`` (the _min_label_components idiom) instead of a
-        # separate limit(1).count() job per round
-        obs_dead = Observation()
-        dead = (
-            _mg_degrees(edges)
-            .filter(F.col("d") < _KCORE_K)
-            .select("node")
-            .observe(obs_dead, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+        # Every emptiness probe rides its checkpoint's own job.
+        dead, n_dead = materialize(
+            "kcore_dead",
+            _mg_degrees(edges).filter(F.col("d") < _KCORE_K).select("node"),
+            count,
         )
-        if obs_dead.get["n"] == 0:
-            LAST_ROUNDS["kcore_parts"] = rounds[0]
-            break
-        bump()
+        if n_dead == 0:
+            LAST_ROUNDS["kcore_parts"] = rounds
+            return state, rounds
+        rounds += 1
         rakes += 1
         rake = edges.join(
             dead.select(F.col("node").alias("u")), "u", "left_anti"
         ).join(dead.select(F.col("node").alias("v")), "v", "left_anti")
-        planhook.emit("kcore_rake_round", rake)
-        edges = rake.localCheckpoint()
+        edges = materialize("kcore_rake_round", rake)
         # COMPRESS: engaged only once raking alone has gone on for a
         # few rounds (_KCORE_COMPRESS_AFTER) -- real corpora peel to
         # fixpoint in 3-5 rakes and never pay the contraction
         # machinery; a deep pendant chain stalls the rake (1-2 nodes
         # per round) and is collapsed here in O(log chain) rounds.
         if rakes < _KCORE_COMPRESS_AFTER:
-            continue
-        obs_d2 = Observation()
-        d2 = (
-            _mg_degrees(edges)
-            .filter(F.col("d") == _KCORE_K)
-            .select("node")
-            .observe(obs_d2, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            return (edges, susp, done, rakes), rounds
+        d2, n_d2 = materialize(
+            "kcore_degree2",
+            _mg_degrees(edges).filter(F.col("d") == _KCORE_K).select("node"),
+            count,
         )
-        if obs_d2.get["n"] == 0:
-            continue
-        bump()  # the contraction rewrite is one materialized round
+        if n_d2 == 0:
+            return (edges, susp, done, rakes), rounds
+        rounds += 1  # the contraction rewrite is one materialized round
         if "eid" not in edges.columns:  # first contraction: attach ids
             edges = edges.select(
                 F.concat_ws(":", F.lit("o"), "u", "v").alias("eid"), "u", "v"
@@ -901,25 +834,24 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pointer doubling only over nodes actually ON a d2-d2 chain;
         # an isolated degree-2 node (both neighbors anchors) is its own
         # trivial chain and needs no rounds at all
-        obs_cn = Observation()
-        chain_nodes = (
+        chain_nodes, n_chain = materialize(
+            "kcore_chain_nodes",
             chain_edges.select(F.col("u").alias("node"))
             .unionByName(chain_edges.select(F.col("v").alias("node")))
-            .distinct()
-            .observe(obs_cn, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            .distinct(),
+            count,
         )
-        if obs_cn.get["n"] > 0:
+        if n_chain > 0:
             ce = chain_edges.select(
                 F.col("u").alias("src"), F.col("v").alias("dst")
             )
-            chained = _min_label_components(
+            chained, chain_rounds = _min_label_components(
                 chain_nodes,
                 ce.unionByName(
                     ce.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                 ),
-                bump,
             )
+            rounds += chain_rounds
             labels = (
                 d2.join(chain_nodes, "node", "left_anti")
                 .select("node", F.col("node").alias("comp"))
@@ -1004,13 +936,11 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # keep the accumulator's plan flat too (iterative-loop
         # discipline): it gains ~2 union branches per contraction
-        done = done.localCheckpoint()
-    else:
-        raise RuntimeError(
-            f"kcore_parts: smooth-and-peel did not reach fixpoint within "
-            f"{_KCORE_MACRO_CAP} macro-rounds -- raise _KCORE_MACRO_CAP "
-            f"rather than accept a partially-peeled core"
-        )
+        return (edges, susp, done.localCheckpoint(), rakes), rounds
+
+    (edges, susp, done, _), _ = fixpoint(
+        "kcore_parts", macro_round, ((edges, susp, done, 0), 0), _KCORE_MACRO_CAP
+    )
     surviving = _mg_degrees(edges).select(
         F.col("node").cast("bigint").alias("part_key"),
         F.col("d").cast("bigint").alias("core_degree"),
@@ -1158,75 +1088,53 @@ def coreness_hindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    # r14: the _min_label_components round-body treatment applied here
-    # (guide §2.4): (a) the edge list is hash-repartitioned by ``dst``
-    # -- the per-round join key -- and CACHED (r15: InMemoryTableScan
-    # preserves outputPartitioning; the r14 localCheckpoint reported
-    # UnknownPartitioning in the committed dumps, so rounds were still
-    # re-shuffling the edges), so rounds shuffle only the narrow
-    # (node, h) relation, never the edges;
-    # (b) the monotone convergence potential rides each round's own
-    # localCheckpoint job via ``observe`` instead of a separate
-    # agg().collect() action per round.  Estimates bit-identical, same
-    # round count.
-    edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "dst")
-    deg = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-        .localCheckpoint()
-    )
-    wg = Window.orderBy(F.col("d").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    h0cap = (
-        deg.groupBy("d")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
-        .select(F.least(F.col("d"), F.sum("nd").over(wg)).alias("cand"))
-        .agg(F.max("cand").alias("h0"))
-        .collect()[0][0]
-    )
-    pot_expr = F.sum(F.col("h").cast("decimal(38,0)")).alias("pot")
-    obs0 = Observation()
-    h = (
-        deg.select(
-            "node", F.least(F.col("d"), F.lit(int(h0cap))).cast("bigint").alias("h")
+    # the _min_label_components round-body treatment: edges staged by
+    # ``dst`` (the per-round join key), so rounds shuffle only the narrow
+    # (node, h) relation, and the potential rides each round's checkpoint
+    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "dst") as edges:
+        deg = (
+            edges.groupBy(F.col("src").alias("node"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+            .localCheckpoint()
         )
-        .observe(obs0, pot_expr)
-        .localCheckpoint()
-    )
-    potential = obs0.get["pot"]
-    w = Window.partitionBy("node").orderBy(F.col("nh").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    try:
-        for rnd in range(_HIX_CAP):
+        wg = Window.orderBy(F.col("d").desc()).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        h0cap = (
+            deg.groupBy("d")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
+            .select(F.least(F.col("d"), F.sum("nd").over(wg)).alias("cand"))
+            .agg(F.max("cand").alias("h0"))
+            .collect()[0][0]
+        )
+        pot = F.sum(F.col("h").cast("decimal(38,0)"))
+        w = Window.partitionBy("node").orderBy(F.col("nh").desc()).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+
+        def step(h, _pot):
             cnt = (
                 edges.join(h, edges.dst == h.node)
                 .select(F.col("src").alias("node"), F.col("h").alias("nh"))
                 .groupBy("node", "nh")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
             )
-            obs = Observation()
             stepped = (
                 cnt.withColumn("s", F.sum("cnt").over(w))
                 .groupBy("node")
                 .agg(F.max(F.least(F.col("nh"), F.col("s"))).alias("h"))
             )
-            planhook.emit("coreness_hindex_round", stepped)
-            h = stepped.observe(obs, pot_expr).localCheckpoint()
-            new_potential = obs.get["pot"]
-            if new_potential == potential:
-                LAST_ROUNDS["coreness_hindex"] = rnd
-                break
-            potential = new_potential
-        else:
-            raise RuntimeError(
-                f"coreness_hindex: h-iteration still decreasing after "
-                f"{_HIX_CAP} rounds -- raise _HIX_CAP rather than publish "
-                f"unconverged coreness"
-            )
-    finally:
-        edges.unpersist()
+            return materialize("coreness_hindex_round", stepped, pot)
+
+        start = deg.select(
+            "node", F.least(F.col("d"), F.lit(int(h0cap))).cast("bigint").alias("h")
+        )
+        h, LAST_ROUNDS["coreness_hindex"] = fixpoint(
+            "coreness_hindex",
+            step,
+            materialize("coreness_hindex_start", start, pot),
+            _HIX_CAP,
+        )
     return h.select(
         F.col("node").cast("bigint").alias("part_key"),
         F.col("h").cast("bigint").alias("coreness"),
@@ -1273,7 +1181,7 @@ def graph_modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the statistic non-degenerate (a connected-component partition has
     all edges intra by construction -- probed, Q collapses).
 
-    Plan shape: the checkpointed edge list joins the (node, brand)
+    Plan shape: the staged edge list joins the (node, brand)
     labeling twice -- left to AQE, which broadcasts the labeling when
     it is small (it is, at fixture scale) and shuffles when it is not
     (the labeling is O(parts), i.e. scales with SF, so a FORCED
@@ -1284,71 +1192,69 @@ def graph_modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no graph operators in the reference (DAG1:1-322,
     linear pandas flows); see the module docstring.
     """
-    # r15: src-partitioned CACHE shared by both edge consumers (deg's
-    # groupBy(src) and intra's src-label join) -- InMemoryTableScan
-    # preserves the hash(src) partitioning, so neither re-shuffles the
-    # edges (the r14 localCheckpoint reported UnknownPartitioning and a
-    # fresh Exchange in this entry's own committed r14 dump); the lazy
-    # cache also drops the eager checkpoint-materialization job.  The
-    # returned lazy result reads the cache (the pagerank-ewd pattern),
-    # so no unpersist here; the bench clears caches between entries.
-    edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
-    lab = t(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("node"), F.col("p_brand").alias("brand")
-    )
-    la = lab.select(F.col("node").alias("src"), F.col("brand").alias("brand_a"))
-    lb = lab.select(F.col("node").alias("dst"), F.col("brand").alias("brand_b"))
-    # r14 (guide §2.3/§2.4): the labeling covers every node (edge
-    # endpoints are part keys), so degree_sum per brand folds from the
-    # O(nodes) degree relation against the labeling, and t_dir folds
-    # from deg -- the old plan fed the full two-label-join edge
-    # relation to a SECOND aggregate consumer (degs) and ran a third
-    # edge scan for t_dir; both now cost O(nodes).  intra keeps the
-    # two-label-join shape -- it genuinely needs both endpoint brands
-    # per edge, and an aggregate-first rewrite (per-(src, brand) counts
-    # then attach brand_a) measured a consistent ~0.2 s SLOWER at sf0.1
-    # (the added exchange outweighs the saved broadcast-side join
-    # locally) -- examined and rejected.
-    # No broadcast hint anywhere (unchanged rationale): (node, brand)
-    # is O(parts) and scales with SF, so a forced broadcast OOMs the
-    # driver at 100 TB -- AQE broadcasts at runtime when the labeling
-    # is actually small.  Verified row-identical vs the old plan.
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    tdir = deg.agg(
-        F.coalesce(F.sum("d"), F.lit(0)).cast("bigint").alias("t_dir")
-    )
-    degs = (
-        deg.join(la, "src")
-        .groupBy(F.col("brand_a").alias("brand"))
-        .agg(F.sum("d").cast("bigint").alias("degree_sum"))
-    )
-    intra = (
-        edges.join(la, "src")
-        .join(lb, "dst")
-        .filter(F.col("brand_a") == F.col("brand_b"))
-        .groupBy(F.col("brand_a").alias("brand"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("intra_deg"))
-    )
-    return (
-        degs.join(intra, "brand", "left_outer")
-        .crossJoin(F.broadcast(tdir))
-        .select(
-            "brand",
-            F.coalesce("intra_deg", F.lit(0)).cast("bigint").alias("intra_deg"),
-            "degree_sum",
-            # products route through decimal(38,0) (house overflow
-            # discipline: bigint*bigint wraps silently in non-ANSI Spark
-            # while the oracle errors loudly); the published value must
-            # still fit bigint, i.e. intra*T < 2^63 -- documented bound
-            (
-                F.coalesce("intra_deg", F.lit(0)).cast("decimal(38,0)") * F.col("t_dir")
-                - F.col("degree_sum").cast("decimal(38,0)") * F.col("degree_sum")
-            )
-            .cast("bigint")
-            .alias("contrib_num"),
-            "t_dir",
+    # src-staged edges shared by both edge consumers (deg's groupBy(src)
+    # and intra's src-label join).  The O(brands) result is checkpointed
+    # inside the scope, so nothing returned reads the cache.
+    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
+        lab = t(spark, sf_dir, "part").select(
+            F.col("p_partkey").alias("node"), F.col("p_brand").alias("brand")
         )
-    )
+        la = lab.select(F.col("node").alias("src"), F.col("brand").alias("brand_a"))
+        lb = lab.select(F.col("node").alias("dst"), F.col("brand").alias("brand_b"))
+        # r14 (guide §2.3/§2.4): the labeling covers every node (edge
+        # endpoints are part keys), so degree_sum per brand folds from the
+        # O(nodes) degree relation against the labeling, and t_dir folds
+        # from deg -- the old plan fed the full two-label-join edge
+        # relation to a SECOND aggregate consumer (degs) and ran a third
+        # edge scan for t_dir; both now cost O(nodes).  intra keeps the
+        # two-label-join shape -- it genuinely needs both endpoint brands
+        # per edge, and an aggregate-first rewrite (per-(src, brand) counts
+        # then attach brand_a) measured a consistent ~0.2 s SLOWER at sf0.1
+        # (the added exchange outweighs the saved broadcast-side join
+        # locally) -- examined and rejected.
+        # No broadcast hint anywhere (unchanged rationale): (node, brand)
+        # is O(parts) and scales with SF, so a forced broadcast OOMs the
+        # driver at 100 TB -- AQE broadcasts at runtime when the labeling
+        # is actually small.  Verified row-identical vs the old plan.
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+        tdir = deg.agg(
+            F.coalesce(F.sum("d"), F.lit(0)).cast("bigint").alias("t_dir")
+        )
+        degs = (
+            deg.join(la, "src")
+            .groupBy(F.col("brand_a").alias("brand"))
+            .agg(F.sum("d").cast("bigint").alias("degree_sum"))
+        )
+        intra = (
+            edges.join(la, "src")
+            .join(lb, "dst")
+            .filter(F.col("brand_a") == F.col("brand_b"))
+            .groupBy(F.col("brand_a").alias("brand"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("intra_deg"))
+        )
+        return (
+            degs.join(intra, "brand", "left_outer")
+            .crossJoin(F.broadcast(tdir))
+            .select(
+                "brand",
+                F.coalesce("intra_deg", F.lit(0)).cast("bigint").alias("intra_deg"),
+                "degree_sum",
+                # products route through decimal(38,0) (house overflow
+                # discipline: bigint*bigint wraps silently in non-ANSI Spark
+                # while the oracle errors loudly); the published value must
+                # still fit bigint, i.e. intra*T < 2^63 -- documented bound
+                (
+                    F.coalesce("intra_deg", F.lit(0)).cast("decimal(38,0)")
+                    * F.col("t_dir")
+                    - F.col("degree_sum").cast("decimal(38,0)")
+                    * F.col("degree_sum")
+                )
+                .cast("bigint")
+                .alias("contrib_num"),
+                "t_dir",
+            )
+            .localCheckpoint()
+        )
 
 
 _NJ_VIA_DEGREE_CAP = 64
@@ -1743,37 +1649,32 @@ def lpa_communities_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no graph operators in the reference (DAG1:1-322);
     module docstring covers the family.
     """
-    # r14: dst-partitioned edge staging (the coreness_hindex treatment)
-    # -- each round's join shuffles only the narrow labels relation,
-    # never the edges.  r15: staged via CACHE, which plan-preserves the
-    # hash(dst) partitioning (the r14 localCheckpoint did not -- its
-    # LogicalRDD reported UnknownPartitioning in the committed dumps).
-    edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "dst")
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").cast("bigint").alias("label"))
-        .localCheckpoint()
-    )
-    pack = F.lit(_LPA_PACK)
-    packmax = F.lit(_LPA_PACK - 1)
-    for _ in range(_LPA_ROUNDS):
-        hist = (
-            edges.join(labels, edges.dst == labels.node)
-            .select(F.col("src").alias("n"), "label")
-            .groupBy("n", "label")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    # dst-staged edges (the coreness_hindex treatment): each round's join
+    # shuffles only the narrow labels relation, never the edges
+    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "dst") as edges:
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.col("node").cast("bigint").alias("label"))
+            .localCheckpoint()
         )
-        stepped = hist.groupBy(F.col("n").alias("node")).agg(
-            (
-                packmax
-                - F.max(F.col("cnt") * pack + (packmax - F.col("label")))
-                % pack
-            ).alias("label")
-        )
-        planhook.emit("lpa_communities_round", stepped)
-        labels = stepped.localCheckpoint()
-    edges.unpersist()
+        pack = F.lit(_LPA_PACK)
+        packmax = F.lit(_LPA_PACK - 1)
+        for _ in range(_LPA_ROUNDS):
+            hist = (
+                edges.join(labels, edges.dst == labels.node)
+                .select(F.col("src").alias("n"), "label")
+                .groupBy("n", "label")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+            )
+            stepped = hist.groupBy(F.col("n").alias("node")).agg(
+                (
+                    packmax
+                    - F.max(F.col("cnt") * pack + (packmax - F.col("label")))
+                    % pack
+                ).alias("label")
+            )
+            labels = materialize("lpa_communities_round", stepped)
     return labels.select(
         F.col("node").cast("bigint").alias("part_key"),
         F.col("label").cast("bigint").alias("community"),
@@ -1928,15 +1829,10 @@ def truss_edges_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no graph operators in the reference (DAG1:1-322);
     module docstring covers the family.
     """
-    e = (
-        _copurchase_edges(spark, sf_dir, threshold=2)
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint()
-    )
-    n_edges = e.count()
-    support = None
-    for rnd in range(_TRUSS_CAP):
+    count = F.count(F.lit(1))
+
+    def step(state, _n_edges):
+        e, _ = state
         deg = (
             e.select(F.explode(F.array("a", "b")).alias("p"))
             .groupBy("p")
@@ -1981,19 +1877,22 @@ def truss_edges_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
             .localCheckpoint()
         )
-        step = e.join(support, ["a", "b"], "leftsemi")
-        planhook.emit("truss_peel_round", step)
-        e_next = step.localCheckpoint()
-        n_next = e_next.count()
-        if n_next == n_edges:
-            LAST_ROUNDS["truss_edges_k3"] = rnd
-            break
-        e, n_edges = e_next, n_next
-    else:
-        raise RuntimeError(
-            f"truss_edges_k3: edge peel still shrinking after {_TRUSS_CAP} "
-            "rounds -- raise _TRUSS_CAP rather than publish a partial truss"
+        e_next, n_next = materialize(
+            "truss_peel_round", e.join(support, ["a", "b"], "leftsemi"), count
         )
+        return (e_next, support), n_next
+
+    # the edge count is the potential; it rides each checkpoint's own job
+    e, n_edges = materialize(
+        "truss_edges_k3_start",
+        _copurchase_edges(spark, sf_dir, threshold=2)
+        .filter(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("a"), F.col("dst").alias("b")),
+        count,
+    )
+    (_, support), LAST_ROUNDS["truss_edges_k3"] = fixpoint(
+        "truss_edges_k3", step, ((e, None), n_edges), _TRUSS_CAP
+    )
     return support.select(
         F.col("a").cast("bigint").alias("node_a"),
         F.col("b").cast("bigint").alias("node_b"),
@@ -2056,37 +1955,30 @@ def harmonic_centrality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph-curation machinery (influencer/hub scoring for sampling
     weights).
     """
-    # r14: src-partitioned staging -- the src-keyed per-round consumers
-    # (joins/aggregates on edges.src) reuse the preserved partitioning
-    # exchange-free.  r15: staged via CACHE, which plan-preserves the
-    # hash(src) partitioning (the r14 localCheckpoint did not -- its
-    # LogicalRDD reported UnknownPartitioning in the committed dumps).
-    edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    seeds = (
-        deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
-        .limit(_HC_SEEDS)
-        .select(F.col("src").alias("seed"))
-    )
-    visited = seeds.select(
-        "seed", F.col("seed").alias("node"), F.lit(0).alias("hop")
-    ).localCheckpoint()
-    frontier = visited.select("seed", "node")
-    for h in range(1, _HC_HOPS + 1):
-        step = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, ["seed", "node"], "left_anti")
-            .select("seed", "node", F.lit(h).alias("hop"))
+    # src-staged: the src-keyed per-round join reads the cache exchange-free
+    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        seeds = (
+            deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
+            .limit(_HC_SEEDS)
+            .select(F.col("src").alias("seed"))
         )
-        planhook.emit("harmonic_centrality_round", step)
-        nxt = step.localCheckpoint()
-        # r14: lazy visited union -- the graph_bfs_hops rationale (every
-        # child checkpointed; one materialization job per hop removed)
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("seed", "node")
-    edges.unpersist()
+        visited = seeds.select(
+            "seed", F.col("seed").alias("node"), F.lit(0).alias("hop")
+        ).localCheckpoint()
+        frontier = visited.select("seed", "node")
+        for h in range(1, _HC_HOPS + 1):
+            step = (
+                frontier.join(edges, frontier.node == edges.src)
+                .select("seed", F.col("dst").alias("node"))
+                .distinct()
+                .join(visited, ["seed", "node"], "left_anti")
+                .select("seed", "node", F.lit(h).alias("hop"))
+            )
+            nxt = materialize("harmonic_centrality_round", step)
+            # lazy visited union of checkpoints (the graph_bfs_hops rationale)
+            visited = visited.unionByName(nxt)
+            frontier = nxt.select("seed", "node")
     return (
         visited.filter(F.col("hop") > 0)
         .groupBy("node")
@@ -2177,43 +2069,33 @@ def scc_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("b").isNotNull())
     pairs = seq.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_ab"))
     totals = pairs.groupBy("a").agg(F.sum("n_ab").alias("n_a"))
-    edges = (
+    count = F.count(F.lit(1))  # the pair-count potential
+    edges, n_pairs = materialize(
+        "scc_closure_start",
         pairs.join(F.broadcast(totals), "a")
         .filter(F.col("n_ab").cast("double") / F.col("n_a") >= _SCC_PROB)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .localCheckpoint()
+        .select(F.col("a").alias("src"), F.col("b").alias("dst")),
+        count,
     )
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    r = edges
-    n_pairs = r.count()
-    for rnd in range(1, _SCC_CAP + 1):
+
+    def step(r, _n_pairs):
         r2 = r.select(F.col("src").alias("mid"), F.col("dst").alias("dst2"))
-        # r14: the pair-count potential rides the round's own
-        # localCheckpoint job via observe (the _min_label_components
-        # idiom) instead of a separate count() job per round
-        obs = Observation()
-        step = (
+        grown = (
             r.join(r2, r.dst == r2.mid)
             .select("src", F.col("dst2").alias("dst"))
             .unionByName(r)
             .distinct()
         )
-        planhook.emit("scc_closure_round", step)
-        grown = step.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-        n_next = obs.get["n"]
-        if n_next == n_pairs:
-            LAST_ROUNDS["scc_event_types"] = rnd
-            break
-        r, n_pairs = grown, n_next
-    else:
-        raise RuntimeError(
-            f"scc_event_types: closure still growing after {_SCC_CAP} doubling "
-            "rounds -- raise _SCC_CAP rather than publish a partial closure"
-        )
+        return materialize("scc_closure_round", grown, count)
+
+    r, LAST_ROUNDS["scc_event_types"] = fixpoint(
+        "scc_event_types", step, (edges, n_pairs), _SCC_CAP
+    )
     back = r.select(F.col("src").alias("b_src"), F.col("dst").alias("b_dst"))
     mutual = r.join(
         back, (r.src == back.b_dst) & (r.dst == back.b_src)
@@ -2335,17 +2217,10 @@ def densest_subgraph_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     RuntimeError if the cap is ever hit (impossible below ~1.5^48
     nodes, but never publish a partial peel silently).
     """
-    # r15: src-partitioned CACHE -- round 1's degree aggregate and src
-    # semi-join consume the preserved hash(src) partitioning
-    # exchange-free (the r14 localCheckpoint reported
-    # UnknownPartitioning in the committed dumps; InMemoryTableScan is
-    # the pattern that plan-preserves it).  greedy_densest_subgraph
-    # runs the peel eagerly and its result references only checkpointed
-    # survivor sets, so the cache is released right after.
-    edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
-    out = greedy_densest_subgraph(edges, rounds_key="densest_subgraph_peel")
-    edges.unpersist()
-    return out
+    # src-staged: round 0's degree aggregate and src semi-join read the
+    # cache exchange-free; the result references only checkpoints
+    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
+        return greedy_densest_subgraph(edges, rounds_key="densest_subgraph_peel")
 
 
 def greedy_densest_subgraph(
@@ -2354,73 +2229,54 @@ def greedy_densest_subgraph(
     """Bahmani-peel core over a bidirectional ``(src, dst)`` edge
     DataFrame (see ``densest_subgraph_peel`` for the algorithm and the
     scale contract). Exposed separately so tests can drive it on
-    synthetic graphs (planted-clique behavior)."""
-    # r14 round-body optimization (guide §2.4), results bit-identical:
-    # - survivors derive from e's OWN degree aggregate: a node of s with
-    #   zero surviving edges has deg 0 and fails the cross-multiplied
-    #   test (2n*0 > 3D is false for D >= 0), so the old s-side
-    #   left_outer join existed only to manufacture rows the filter
-    #   drops anyway -- one partially-aggregated shuffle per round, no
-    #   join.  (dd == 0 edge case: old removed every node via deg 0,
-    #   new yields an empty aggregate -- same empty s.)
-    # - n rides each round's s-checkpoint job via ``observe`` (the
-    #   _min_label_components idiom); dd IS the cache-materializing
-    #   count of the round's surviving edges (one action either way).
-    # - e re-stages hash-partitioned by src via CACHE, so the next
-    #   round's degree aggregate and src semi-join are exchange-free
-    #   (r15: InMemoryTableScan preserves output partitioning; the r14
-    #   localCheckpoint did not -- UnknownPartitioning in the committed
-    #   dumps); only the dst semi-join re-shuffles the surviving edges.
-    #   Each round's cache is unpersisted once the next round's is
-    #   materialized (the caller owns the round-0 ``edges`` staging).
-    obs0 = Observation()
-    s = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    e = edges
-    prev_e = None  # rounds' caches; round-0 edges belongs to the caller
-    n, dd = obs0.get["n"], e.count()
+    synthetic graphs (planted-clique behavior).
+
+    Round body: survivors derive from the round's OWN degree aggregate
+    -- a node with zero surviving edges has deg 0 and fails the
+    cross-multiplied test anyway, so no s-side join is needed.  n rides
+    the survivor checkpoint's job; dd is the count that fills the
+    round's survivor-edge stage.  Each round restages its surviving
+    edges by ``src``, so the next round's degree aggregate and src
+    semi-join are exchange-free; a round's stage is released once the
+    next one is filled, the last one when the peel returns."""
+    count = F.count(F.lit(1))
     best = None  # (density, node_set, n, dd)
-    for rnd in range(_DSG_CAP):
-        if n == 0:
-            if rounds_key is not None:
-                LAST_ROUNDS[rounds_key] = rnd
-            break
-        dens = dd / (2 * n)
-        if best is None or dens > best[0]:
-            best = (dens, s, n, dd)
-        deg = e.groupBy(F.col("src").alias("node")).agg(
-            F.count(F.lit(1)).alias("deg")
+    with ExitStack() as held:  # the newest round's survivor-edge stage
+
+        def step(state, n):
+            nonlocal best
+            s, e, dd = state
+            if n == 0:  # peeled empty: nothing left to change
+                return state, n
+            dens = dd / (2 * n)
+            if best is None or dens > best[0]:
+                best = (dens, s, n, dd)
+            deg = e.groupBy(F.col("src").alias("node")).agg(count.alias("deg"))
+            s, n = materialize(
+                "densest_subgraph_round",
+                deg.filter(2 * F.lit(n) * F.col("deg") > 3 * F.lit(dd)).select("node"),
+                count,
+            )
+            survivors = e.join(
+                s.select(F.col("node").alias("src")), "src", "leftsemi"
+            ).join(s.select(F.col("node").alias("dst")), "dst", "leftsemi")
+            with ExitStack() as fresh:
+                e = fresh.enter_context(staged(survivors, "src"))
+                dd = e.count()
+                held.close()  # the previous stage is no longer read
+                held.enter_context(fresh.pop_all())
+            return (s, e, dd), n
+
+        s0, n0 = materialize(
+            "densest_subgraph_start",
+            edges.select(F.col("src").alias("node")).distinct(),
+            count,
         )
-        obs_s = Observation()
-        s = (
-            deg.filter(2 * F.lit(n) * F.col("deg") > 3 * F.lit(dd))
-            .select("node")
-            .observe(obs_s, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+        _, rounds = fixpoint(
+            "densest_subgraph_peel", step, ((s0, edges, edges.count()), n0), _DSG_CAP
         )
-        e_next = e.join(
-            s.select(F.col("node").alias("src")), "src", "leftsemi"
-        ).join(s.select(F.col("node").alias("dst")), "dst", "leftsemi")
-        planhook.emit("densest_subgraph_round", e_next)
-        e_next = stage_loop_edges(e_next, "src")
-        n, dd = obs_s.get["n"], e_next.count()
-        if prev_e is not None:
-            prev_e.unpersist()
-        prev_e, e = e_next, e_next
-    else:
-        raise RuntimeError(
-            f"densest_subgraph_peel: set non-empty after {_DSG_CAP} rounds -- "
-            "the 1/3-per-round removal guarantee was violated; investigate "
-            "rather than publish a partial peel"
-        )
-    if prev_e is not None:
-        # the surviving-set frames in ``best`` are checkpointed; the last
-        # round's edge cache is no longer referenced by anything returned
-        prev_e.unpersist()
+    if rounds_key is not None:
+        LAST_ROUNDS[rounds_key] = rounds
     if best is None:
         # n == 0 at round 0: no nodes at all (empty edge DataFrame).
         # Density is undefined on the empty graph; fail loudly instead of
@@ -2510,88 +2366,59 @@ def mis_parts_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_bfs_hops measurement; loud RuntimeError if the active set
     survives the cap (never publish a partial MIS).
     """
-    # r14 round-body optimization (guide §2.4), MIS bit-identical:
-    # - a node's priority is md5(node) -- a PURE FUNCTION of the id the
-    #   edge row already carries -- so the per-round pri equi-join in
-    #   the neighbor-min aggregate is replaced by computing md5(dst)
-    #   inline on the active edge stream (one join per round gone);
-    # - the active-induced edge set feeds BOTH the neighbor-min and the
-    #   kill set; it is staged src-partitioned so its two semi-joins run
-    #   once per round, not twice (r15: staged via CACHE, which
-    #   plan-preserves hash(src) for the neighbor-min groupBy and the
-    #   kill semi-join -- the r14 localCheckpoint did not -- AND is lazy,
-    #   so the separate eager eact-materialization job per round is gone:
-    #   the cache fills inside cand's own checkpoint job);
-    # - the active-set emptiness probe rides each round's own
-    #   localCheckpoint job via ``observe`` instead of an isEmpty() job.
-    # r15: src-partitioned CACHE for the loop-invariant edges -- the
-    # src-keyed per-round consumers reuse the preserved partitioning
-    # exchange-free (see _min_label_components on why localCheckpoint
-    # could not deliver this)
-    edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    obs0 = Observation()
-    pri = (
-        nodes.select("node", F.md5(F.col("node").cast("string")).alias("pri"))
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    act, n_act = pri, obs0.get["n"]
+    # Round body: a node's priority is md5(node), a pure function of the
+    # id the edge row already carries, so the neighbor-min computes
+    # md5(dst) inline instead of joining pri; the active-induced edge set
+    # feeds both the neighbor-min and the kill set, so it is staged by
+    # src once per round (filled inside cand's own checkpoint job) and
+    # released when the round ends.
+    count = F.count(F.lit(1))
     mis_parts = []
-    try:
-        for rnd in range(_MIS_ROUNDS):
-            if n_act == 0:
-                LAST_ROUNDS["mis_parts_luby"] = rnd
-                break
-            eact = stage_loop_edges(
-                edges.join(
-                    act.select(F.col("node").alias("src")), "src", "leftsemi"
-                ).join(
-                    act.select(F.col("node").alias("dst")), "dst", "leftsemi"
-                ),
-                "src",
-            )
-            nbmin = (
-                eact.select(
-                    "src", F.md5(F.col("dst").cast("string")).alias("npri")
+    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
+
+        def step(act, n_act):
+            if n_act == 0:  # nothing left active
+                return act, n_act
+            active_edges = edges.join(
+                act.select(F.col("node").alias("src")), "src", "leftsemi"
+            ).join(act.select(F.col("node").alias("dst")), "dst", "leftsemi")
+            with staged(active_edges, "src") as eact:
+                nbmin = (
+                    eact.select(
+                        "src", F.md5(F.col("dst").cast("string")).alias("npri")
+                    )
+                    .groupBy("src")
+                    .agg(F.min("npri").alias("minp"))
+                    .withColumnRenamed("src", "node")
                 )
-                .groupBy("src")
-                .agg(F.min("npri").alias("minp"))
-                .withColumnRenamed("src", "node")
-            )
-            step = (
-                act.join(nbmin, "node", "left_outer")
-                .filter(F.col("minp").isNull() | (F.col("pri") < F.col("minp")))
-                .select("node")
-            )
-            planhook.emit("mis_parts_luby_round", step)
-            cand = step.localCheckpoint()
-            mis_parts.append(cand.select("node", F.lit(rnd).alias("r")))
-            killed = cand.unionByName(
-                eact.join(
-                    cand.select(F.col("node").alias("src")), "src", "leftsemi"
+                cand = materialize(
+                    "mis_parts_luby_round",
+                    act.join(nbmin, "node", "left_outer")
+                    .filter(F.col("minp").isNull() | (F.col("pri") < F.col("minp")))
+                    .select("node"),
                 )
-                .select(F.col("dst").alias("node"))
-                .distinct()
-            )
-            obs = Observation()
-            act = (
-                act.join(killed, "node", "left_anti")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
-            )
-            n_act = obs.get["n"]
-            # both eact consumers (cand's checkpoint, act's checkpoint)
-            # have executed -- release this round's cache
-            eact.unpersist()
-        else:
-            raise RuntimeError(
-                f"mis_parts_luby: active set non-empty after {_MIS_ROUNDS} "
-                "rounds -- raise _MIS_ROUNDS (and the oracle unroll) rather "
-                "than publish a partial MIS"
-            )
-    finally:
-        edges.unpersist()
+                mis_parts.append(cand.select("node", F.lit(len(mis_parts)).alias("r")))
+                killed = cand.unionByName(
+                    eact.join(
+                        cand.select(F.col("node").alias("src")), "src", "leftsemi"
+                    )
+                    .select(F.col("dst").alias("node"))
+                    .distinct()
+                )
+                return materialize(
+                    "mis_parts_luby_active",
+                    act.join(killed, "node", "left_anti"),
+                    count,
+                )
+
+        nodes = edges.select(F.col("src").alias("node")).distinct()
+        pri = nodes.select("node", F.md5(F.col("node").cast("string")).alias("pri"))
+        _, LAST_ROUNDS["mis_parts_luby"] = fixpoint(
+            "mis_parts_luby",
+            step,
+            materialize("mis_parts_luby_start", pri, count),
+            _MIS_ROUNDS,
+        )
     out = mis_parts[0]
     for p in mis_parts[1:]:
         out = out.unionByName(p)

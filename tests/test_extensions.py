@@ -735,3 +735,69 @@ def test_derive_band_bits_supply_clamp(spark):
     # and the expression builder enforces the md5 budget loudly
     with pytest.raises(ValueError):
         simhash_band_cols(F.lit("00"), band_bits=40, n_bands=4)  # 160 > 128
+
+
+# ------------------------------------------------------------ scan views
+
+
+def test_scan_views_are_md5_named_and_reregistered_per_session(spark, tmp_path):
+    """Two paths with the same table name get distinct views named by the
+    path's md5; a second session sharing the app (temp views are
+    session-scoped, the memo is app-scoped) registers its own copy."""
+    import hashlib
+
+    from state_economics_end_to_end_data_pipeline_spark.io import readers
+
+    dirs = [tmp_path / "a", tmp_path / "b"]
+    for i, d in enumerate(dirs):
+        spark.range(3 + i).write.parquet(str(d / "t.parquet"))
+    counts = [read_parquet_table(spark, str(d), "t").count() for d in dirs]
+    assert counts == [3, 4]
+    app = spark.sparkContext.applicationId
+    views = [readers._SCAN_MEMO[(app, f"{d}/t.parquet")][2] for d in dirs]
+    assert views == [
+        f"__sg_scan_t_{hashlib.md5(f'{d}/t.parquet'.encode()).hexdigest()}"
+        for d in dirs
+    ]
+
+    other = spark.newSession()
+    assert not other.catalog.tableExists(views[0])
+    assert read_parquet_table(other, str(dirs[0]), "t").count() == 3
+    assert other.catalog.tableExists(views[0])
+
+
+def test_scan_view_lookup_propagates_errors_other_than_a_missing_view(
+    spark, tmp_path, monkeypatch
+):
+    d = tmp_path / "c"
+    spark.range(2).write.parquet(str(d / "t.parquet"))
+    read_parquet_table(spark, str(d), "t")  # memo warm
+
+    other = spark.newSession()
+    real, calls = other.table, []
+
+    def flaky(name):  # fails once, then works: a retry would hide it
+        calls.append(name)
+        if len(calls) == 1:
+            raise RuntimeError("catalog unavailable")
+        return real(name)
+
+    monkeypatch.setattr(other, "table", flaky)
+    with pytest.raises(RuntimeError, match="catalog unavailable"):
+        read_parquet_table(other, str(d), "t")
+
+
+def test_clear_scan_memo_picks_up_a_rewritten_path(spark, tmp_path):
+    from state_economics_end_to_end_data_pipeline_spark.io.readers import (
+        clear_scan_memo,
+    )
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(2).write.parquet(path)
+    assert read_parquet_table(spark, str(tmp_path), "t").columns == ["id"]
+    spark.range(2).withColumn("x", F.lit(1)).write.mode("overwrite").parquet(path)
+    # the memo keeps the first schema until cleared (path-immutability
+    # contract); clearing re-resolves it
+    assert read_parquet_table(spark, str(tmp_path), "t").columns == ["id"]
+    clear_scan_memo()
+    assert read_parquet_table(spark, str(tmp_path), "t").columns == ["id", "x"]

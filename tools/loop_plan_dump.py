@@ -4,7 +4,7 @@ Iterative entries checkpoint every round, so their post-loop
 ``explain`` shows only an aggregate over ``Scan ExistingRDD`` -- the
 per-round join/aggregate shape every optimization claim is about never
 appears in ``tools/opt_probe.py``'s dumps (the r14 verdict's evidence
-gap #2).  This tool registers the ``operators.planhook`` hook, builds
+gap #2).  This tool registers the ``operators.loops`` hook, builds
 each requested entry (building an eager entry RUNS its loop), and
 freezes the FIRST occurrence of each round-body tag to
 ``plans/<dir>/<entry>__<tag>.txt`` as the formatted plan (static plan:
@@ -27,7 +27,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from state_economics_end_to_end_data_pipeline_spark.operators import (  # noqa: E402
-    planhook,
+    loops,
 )
 from state_economics_end_to_end_data_pipeline_spark.plans import load_all  # noqa: E402
 from state_economics_end_to_end_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -69,7 +69,7 @@ def main() -> int:
             p.write_text(plan)
             print(f"  wrote {p.relative_to(REPO)}")
 
-        planhook.HOOK = hook
+        loops.HOOK = hook
         try:
             print(f"{name}: building (loop executes at build for eager entries)")
             df = qs[name].fn(spark, str(args.sf_dir))
@@ -79,7 +79,7 @@ def main() -> int:
             if not seen:
                 print(f"  {name}: no round-body tags fired (not an iterative entry?)")
         finally:
-            planhook.HOOK = None
+            loops.HOOK = None
     return 0
 
 
