@@ -131,118 +131,48 @@ def _nanos_ts_columns(path: str) -> list[str]:
         return []
 
 
-# Per-(application, path) memo of the RESOLVED scan ingredients -- the
-# Spark StructType the footer resolves to, the nanos column list, and
-# the name of a registered temp view over the explicit-schema scan.  A
-# catalog suite calls read_parquet_table thousands of times on the same
-# static files; re-resolving the footer schema through spark.read costs
-# ~100 ms of DRIVER work per call (measured r14, guide §5: the driver
-# should do almost no data work), re-building the scan with an explicit
-# schema ~7 ms (r14's fix), and resolving the registered VIEW ~2 ms
-# (r15: the analyzer's DeduplicateRelations re-aliases the view's plan
-# per query, so self-joins and cross-query reuse stay sound -- the same
-# machinery SQL uses when a query names one table twice).  This caches
-# PLAN ingredients only -- never data, never results: every returned
-# DataFrame is a fresh lazy scan that re-reads parquet at action time,
-# so bench/oracle runs are unaffected semantically.  Keyed by
-# applicationId (same discipline as plans/extensions' session memos)
-# and evicted when the owning app dies.
-_SCAN_MEMO: dict[tuple[str, str], tuple[T.StructType, list[str], str]] = {}
-# IMMUTABILITY CONTRACT: the memo assumes parquet files at a path are
-# immutable for the application's lifetime (true for the static catalog
-# fixtures this engine reads).  A caller that REWRITES a path in-process
-# (tests, incremental artifacts) must call clear_scan_memo() afterwards,
-# or the next read resolves against the stale schema/file listing.
-
-# Sessions whose scan confs have been applied, so the two conf.set py4j
-# round trips (~3 ms) are paid once per session, not per call.  Keyed
-# weakly by the session object: a new session (the multi-session case
-# the conf-on-every-call fix defends) starts unapplied.  Value is True
-# once nanosAsLong has ALSO been set (it is only needed for nanos
-# files, so a session that has read none may still need it later).
-_CONF_APPLIED: "weakref.WeakKeyDictionary[SparkSession, bool]" = None  # type: ignore[assignment]
-
-
-def _apply_scan_confs(spark: SparkSession, need_nanos: bool) -> None:
-    global _CONF_APPLIED
-    if _CONF_APPLIED is None:
-        import weakref
-
-        _CONF_APPLIED = weakref.WeakKeyDictionary()
-    state = _CONF_APPLIED.get(spark)
-    if state is True or (state is False and not need_nanos):
-        return
-    if need_nanos:
-        # A session built outside get_spark (e.g. the driver's) would
-        # otherwise fail the scan with PARQUET_TYPE_ILLEGAL.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Parquet timestamps without isAdjustedToUTC must scan as TIMESTAMP
-    # (session-local), not TIMESTAMP_NTZ -- watermarks, window() and
-    # unix_micros all require TIMESTAMP, and with a UTC session the
-    # micros are identical. Runtime-settable here (not only in
-    # session.get_spark) so the engine behaves the same on a session
-    # built by an external harness.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    _CONF_APPLIED[spark] = bool(need_nanos) or state is True
-
-
-def clear_scan_memo() -> None:
-    """Drop all memoized scan schemas and views (for callers that
-    rewrite parquet fixtures in-process; see the immutability contract
-    above)."""
-    _SCAN_MEMO.clear()
-
-
-def _evict_dead_apps_scan(live_app_id: str) -> None:
-    for k in [k for k in _SCAN_MEMO if k[0] != live_app_id]:
-        del _SCAN_MEMO[k]
-
-
-def _register_scan_view(
-    spark: SparkSession, path: str, schema: T.StructType, view: str
-) -> None:
-    spark.read.schema(schema).parquet(path).createOrReplaceTempView(view)
-
-
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S10 -- columnar scan of a published table (projection + predicate
-    pushdown, partition pruning all free via the parquet source)."""
+    pushdown, partition pruning all free via the parquet source).
+
+    The session's temp view ``__sg_scan_<name>_<md5(path)>`` is the scan
+    memo: a catalog suite reads the same static files hundreds of times,
+    and resolving a registered view costs ~3 ms of driver work (median,
+    ``local[4]``, docs/MEMOS.md) where resolving the footer again costs a
+    Spark job.  The view holds a PLAN, never data: every returned
+    DataFrame re-reads parquet at action time, and the analyzer
+    re-aliases the view per query, so self-joins stay sound.  Temp views
+    are session-scoped, so a second session resolves the footer once for
+    itself.  The view assumes the files at a path do not change: a caller
+    that rewrites a path in-process must ``spark.catalog.dropTempView`` it."""
+    path = f"{sf_dir}/{name}.parquet"
+    # reserved prefix; md5-suffixed because several sf_dirs can carry the
+    # same table name within one session
+    view = f"__sg_scan_{name}_{hashlib.md5(path.encode()).hexdigest()}"
+    try:
+        return spark.table(view)
+    except AnalysisException:
+        pass  # the session's first read of this path
     from pyspark.sql import functions as F
 
-    path = f"{sf_dir}/{name}.parquet"
-    app_id = spark.sparkContext.applicationId
-    memo = _SCAN_MEMO.get((app_id, path))
-    if memo is None:
-        _evict_dead_apps_scan(app_id)
-        nanos_cols = _nanos_ts_columns(path)
-        # confs BEFORE footer resolution: inferTimestampNTZ/nanosAsLong
-        # govern how the footer types resolve into the memoized schema
-        _apply_scan_confs(spark, bool(nanos_cols))
-        schema = spark.read.parquet(path).schema
-        # reserved-prefix view name, unique per path (several sf_dirs
-        # can carry the same table name within one app)
-        view = f"__sg_scan_{name}_{hashlib.md5(path.encode()).hexdigest()}"
-        _register_scan_view(spark, path, schema, view)
-        memo = (schema, nanos_cols, view)
-        _SCAN_MEMO[(app_id, path)] = memo
-    schema, nanos_cols, view = memo
-    # applied per SESSION (not only on a memo miss): the memo is keyed
-    # by applicationId but several SparkSessions can share one
-    # application, and a second session hitting a warm memo must not
-    # scan nanos files without nanosAsLong (PARQUET_TYPE_ILLEGAL)
-    _apply_scan_confs(spark, bool(nanos_cols))
-    try:
-        df = spark.table(view)
-    except AnalysisException:
-        # temp views are SESSION-scoped while the memo is app-scoped: a
-        # second session sharing the app registers its own copy
-        _register_scan_view(spark, path, schema, view)
-        df = spark.table(view)
+    nanos_cols = _nanos_ts_columns(path)
+    # Set before the footer resolves, on the reading session: a session
+    # built outside get_spark (e.g. an external harness's) would otherwise
+    # fail nanos files with PARQUET_TYPE_ILLEGAL, and read naive
+    # timestamps as TIMESTAMP_NTZ (watermarks, window() and unix_micros
+    # all require TIMESTAMP; with a UTC session the micros are identical).
+    if nanos_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    df = spark.read.parquet(path)
     dtypes = dict(df.dtypes)
+    # pyarrow also reports INT96 timestamps as ns; Spark scans those as
+    # TIMESTAMP already, so only the bigint columns need converting
     for c in nanos_cols:
         if dtypes.get(c) == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    df.createOrReplaceTempView(view)
+    return spark.table(view)
 
 
 def read_csv_with_quarantine(
@@ -303,20 +233,6 @@ def read_orc_table(spark: SparkSession, path: str) -> DataFrame:
     the native vectorized ORC source; exists so published tables can be
     consumed from either columnar format."""
     return spark.read.orc(path)
-
-
-def load_testdata(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    """Convenience: load the driver testdata tables and register temp views."""
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    out: dict[str, DataFrame] = {}
-    for n in names:
-        df = read_parquet_table(spark, sf_dir, n)
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out
 
 
 def read_xml(

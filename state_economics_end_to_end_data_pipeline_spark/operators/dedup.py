@@ -126,7 +126,6 @@ def jaccard_pairs(
     shingle_n: int = 3,
     min_jaccard: float = 0.0,
     block_col: str | None = None,
-    eager: bool = False,
 ) -> DataFrame:
     """Tier 5 -- exact n-gram Jaccard similarity via inverted-index join:
     explode distinct shingles, self-join on shingle (pairs meet only where
@@ -134,14 +133,13 @@ def jaccard_pairs(
     ``block_col`` restricts pairs to the same block (e.g. a source or an
     LSH bucket) -- the scale lever.
 
-    ``eager=False`` (default): the result is fully lazy and nothing is
-    persisted -- calling this function never runs a job, so plan-only
-    consumers (explain dumps, schema enumeration, catalog construction)
-    pay nothing. The nominal cost would be re-executing the index
-    pipeline 3x on action (both self-join sides + the size aggregate),
-    but in practice it does NOT recompute: the index is materialized by
-    ONE exchange that all three consumers share via AQE runtime stage
-    reuse (measured: removing the materialization point entirely and
+    The result is fully lazy and nothing is persisted -- calling this
+    function never runs a job, so plan-only consumers (explain dumps,
+    schema enumeration, catalog construction) pay nothing. The nominal
+    cost would be re-executing the index pipeline 3x on action (both
+    self-join sides + the size aggregate), but in practice it does NOT
+    recompute: the index is materialized by ONE exchange that all three
+    consumers share via AQE runtime stage reuse (measured: removing the materialization point entirely and
     carrying sizes inline made the query ~40% SLOWER at sf0.1 because
     each self-join side then re-ran the tokenize+shingle pass).
 
@@ -157,20 +155,7 @@ def jaccard_pairs(
     must not double-count grams) but now runs ABOVE the repartition,
     where HashPartitioning(block, gram) already satisfies its clustered
     distribution -- a hash aggregate, no second exchange (verified in
-    the executed plan).
-
-    ``eager=True`` -- opt in when the result will definitely be acted on
-    and the session is long-lived: cache lifecycle is OWNED BY THE
-    OPERATOR. The shingle index is persisted, the pair result is
-    materialized via ``localCheckpoint`` (pairs are a small fraction of
-    the index when blocking is in effect -- that is the point of
-    blocking), and the index is unpersisted before returning, so the
-    shared session is left with no stray cached relations (never
-    ``clearCache()``, which would evict every cached relation
-    session-wide). Note the trade-offs: the job runs at CALL time, and a
-    localCheckpoint'ed result is not recomputable on executor loss."""
-    # the inverted index feeds BOTH self-join sides and the per-doc size
-    # aggregate -- persisted (eager mode) so explode+dedup runs once.
+    the executed plan)."""
     join_keys = ["block", "gram"] if block_col else ["gram"]
     sh = (
         df.withColumn("__toks", tokens(text_col))
@@ -186,8 +171,6 @@ def jaccard_pairs(
         .repartition(*[F.col(k) for k in join_keys])
         .dropDuplicates()
     )
-    if eager:
-        sh = sh.persist()
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
     a = sh.withColumnRenamed("id", "id_a")
     b = sh.withColumnRenamed("id", "id_b")
@@ -210,13 +193,6 @@ def jaccard_pairs(
     )
     if min_jaccard > 0:
         out = out.filter(F.col("jaccard") >= min_jaccard)
-    if eager:
-        # materialize the pairs (lineage truncated -- the index is no
-        # longer referenced), then release the index: targeted unpersist,
-        # not clearCache. The checkpointed result blocks are managed by
-        # Spark's ContextCleaner once the caller drops the frame.
-        out = out.localCheckpoint(eager=True)
-        sh.unpersist(blocking=False)
     return out
 
 

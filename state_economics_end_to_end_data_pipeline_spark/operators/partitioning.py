@@ -23,12 +23,13 @@ from pyspark.sql import DataFrame
 # same table scans every bench pass; ``semanticHash`` (analysis only,
 # ~15 ms) keys the memo instead.  Plan METADATA only -- never data or
 # results; partition counts are stable within an app (same files, same
-# split confs).  Same app-scoped eviction discipline (and the same
-# path-immutability contract -- rewritten fixtures need clear()) as
-# readers' _SCAN_MEMO.  semanticHash is 32-bit: a collision would reuse
-# another plan's partition count and mis-gate the repartition -- a
-# PERFORMANCE-only risk (never correctness: rebalance_for_cpu returns
-# row-identical data either way), accepted at ~2e-10 per plan pair.
+# split confs).  Entries of dead apps are evicted; like readers' scan
+# views, the memo assumes the files at a path do not change (rewritten
+# fixtures need clear_npart_memo()).  semanticHash is 32-bit: a
+# collision would reuse another plan's partition count and mis-gate the
+# repartition -- a PERFORMANCE-only risk (never correctness:
+# rebalance_for_cpu returns row-identical data either way), accepted at
+# ~2e-10 per plan pair.
 _NPART_MEMO: dict[tuple[str, int], int] = {}
 
 

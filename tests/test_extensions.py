@@ -742,23 +742,21 @@ def test_derive_band_bits_supply_clamp(spark):
 
 def test_scan_views_are_md5_named_and_reregistered_per_session(spark, tmp_path):
     """Two paths with the same table name get distinct views named by the
-    path's md5; a second session sharing the app (temp views are
-    session-scoped, the memo is app-scoped) registers its own copy."""
+    path's md5; a second session (temp views are session-scoped)
+    registers its own copy on its first read."""
     import hashlib
-
-    from state_economics_end_to_end_data_pipeline_spark.io import readers
 
     dirs = [tmp_path / "a", tmp_path / "b"]
     for i, d in enumerate(dirs):
         spark.range(3 + i).write.parquet(str(d / "t.parquet"))
-    counts = [read_parquet_table(spark, str(d), "t").count() for d in dirs]
-    assert counts == [3, 4]
-    app = spark.sparkContext.applicationId
-    views = [readers._SCAN_MEMO[(app, f"{d}/t.parquet")][2] for d in dirs]
-    assert views == [
+    views = [
         f"__sg_scan_t_{hashlib.md5(f'{d}/t.parquet'.encode()).hexdigest()}"
         for d in dirs
     ]
+    assert not any(spark.catalog.tableExists(v) for v in views)
+    counts = [read_parquet_table(spark, str(d), "t").count() for d in dirs]
+    assert counts == [3, 4]
+    assert all(spark.catalog.tableExists(v) for v in views)
 
     other = spark.newSession()
     assert not other.catalog.tableExists(views[0])
@@ -788,16 +786,50 @@ def test_scan_view_lookup_propagates_errors_other_than_a_missing_view(
 
 
 def test_clear_scan_memo_picks_up_a_rewritten_path(spark, tmp_path):
-    from state_economics_end_to_end_data_pipeline_spark.io.readers import (
-        clear_scan_memo,
-    )
+    """A rewritten path keeps the schema its scan view resolved until the
+    caller drops the view; the next read then resolves the new footer."""
+    import hashlib
 
     path = str(tmp_path / "t.parquet")
+    view = f"__sg_scan_t_{hashlib.md5(path.encode()).hexdigest()}"
     spark.range(2).write.parquet(path)
     assert read_parquet_table(spark, str(tmp_path), "t").columns == ["id"]
     spark.range(2).withColumn("x", F.lit(1)).write.mode("overwrite").parquet(path)
-    # the memo keeps the first schema until cleared (path-immutability
-    # contract); clearing re-resolves it
     assert read_parquet_table(spark, str(tmp_path), "t").columns == ["id"]
-    clear_scan_memo()
+    spark.catalog.dropTempView(view)
     assert read_parquet_table(spark, str(tmp_path), "t").columns == ["id", "x"]
+
+
+def test_scan_sets_its_confs_on_a_session_that_lacks_them(spark, tmp_path):
+    """A session without the two scan confs (one built outside get_spark)
+    reads pyarrow's timestamp[ns] and naive timestamp[us] columns as
+    TIMESTAMP with the exact microseconds; the footer is resolved once,
+    so the second read of the path in that session runs no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    micros = [1_600_000_000_123_456, 1_700_000_000_000_001]
+    pq.write_table(
+        pa.table({
+            "k": [0, 1],
+            "ns": pa.array([m * 1000 + 789 for m in micros], pa.timestamp("ns")),
+            "us": pa.array(micros, pa.timestamp("us")),
+        }),
+        str(tmp_path / "ts.parquet"),
+    )
+    other = spark.newSession()
+    other.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    other.conf.unset("spark.sql.parquet.inferTimestampNTZ.enabled")
+    assert other.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+    assert other.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+
+    def read():
+        return read_parquet_table(other, str(tmp_path), "ts")
+
+    # the footer job: the group sees the scan's jobs
+    assert _jobs_in_group(other, "scan-first-read", read) >= 1
+    assert _jobs_in_group(other, "scan-second-read", read) == 0
+    df = read()
+    assert dict(df.dtypes) == {"k": "bigint", "ns": "timestamp", "us": "timestamp"}
+    got = df.select("k", F.unix_micros("ns"), F.unix_micros("us")).collect()
+    assert sorted(tuple(r) for r in got) == [(i, m, m) for i, m in enumerate(micros)]

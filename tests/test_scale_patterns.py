@@ -24,6 +24,7 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir):
         lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
         "b_lineitem", ["o_orderkey"], 8,
     )
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
@@ -32,7 +33,7 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir):
         assert "Exchange" not in plan, plan
         assert joined.count() == lineitem.count()
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
