@@ -10,16 +10,24 @@ chosen to also be the right default on a 1000-executor cluster:
   ingest shim and multimodal UDFs).
 - UTC session timezone so timestamp semantics match the DuckDB oracle and are
   stable across clusters.
+- The package's parent directory on the Python workers' ``PYTHONPATH``, so
+  UDFs and Python data sources import the package from any working
+  directory.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 # local task slots: $SPARK_GRAFT_CPUS, else the CPUs this process may run on
 LOCAL_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+# the directory the package is imported from, for the workers' sys.path
+PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
+WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -35,6 +43,10 @@ def get_spark(
     """
     master = master or f"local[{LOCAL_CPUS}]"
     shuffle_partitions = shuffle_partitions or LOCAL_CPUS
+    extra_conf = dict(extra_conf or {})
+    extra_conf[WORKER_PYTHONPATH] = os.pathsep.join(
+        p for p in (PACKAGE_ROOT, extra_conf.get(WORKER_PYTHONPATH)) if p
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -61,7 +73,7 @@ def get_spark(
         # engine agnostic to which flavor the upstream writer produced
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

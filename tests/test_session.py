@@ -1,0 +1,38 @@
+"""``session.get_spark`` from a driver whose working directory is not the
+repository root: the Python workers must still import the package."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+from .conftest import REPO_ROOT, SF_SMOKE
+
+SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from state_economics_end_to_end_data_pipeline_spark.plans import load_all
+from state_economics_end_to_end_data_pipeline_spark.session import get_spark
+
+spark = get_spark(app_name="worker-path", shuffle_partitions=2)
+qs = load_all()
+for name in ("pyds_synthetic_events", "multimodal_pixels"):
+    print(name, len(qs[name].fn(spark, sys.argv[2]).collect()))
+"""
+
+
+def test_workers_import_the_package_from_another_directory(tmp_path):
+    """The repo is only on the driver's ``sys.path`` (not on ``PYTHONPATH``,
+    not the working directory); a Python data source and a pandas UDF entry
+    must still run."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", SCRIPT, str(REPO_ROOT), SF_SMOKE],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "ModuleNotFoundError" not in out.stderr, out.stderr[-3000:]
+    assert out.returncode == 0, out.stderr[-3000:]
+    rows = dict(line.split() for line in out.stdout.splitlines())
+    assert set(rows) == {"pyds_synthetic_events", "multimodal_pixels"}
+    assert all(int(n) > 0 for n in rows.values()), rows

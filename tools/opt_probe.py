@@ -1,33 +1,29 @@
-"""Round-14 optimization probe: time catalog entries IN ISOLATION with
-the bench's exact methodology (build the DataFrame, drain with
-``collect()``, min-of-N, ``clearCache()`` between entries) and
-optionally freeze each entry's ``explain("formatted")`` under
-``plans/r14/<name>_<tag>.txt``.
+"""Time catalog entries in isolation with the bench's method (build the
+DataFrame, drain it with ``collect()``, min-of-N, ``clearCache()`` between
+entries) and print one JSON line per entry: best and first seconds, rows,
+and the first run's jobs, stages, shuffle bytes (read + write) and spill.
 
-Why not bench.py: a full 287-entry pass takes ~12 min and its per-entry
-numbers carry suite-position noise (JIT warmth, GC debt).  Optimizing
-one operator needs a tight loop: probe the entry alone, change the
-plan, probe again — guide §1.1's empirical loop.
+Why not bench.py: a full 287-entry pass carries suite-position noise (JIT
+warmth, GC debt); optimizing one operator needs a tight loop over the
+entry alone.  With no names, every catalog entry is run once in turn --
+``docs/SHUFFLE_REPORT.jsonl`` is that output at ``--n 1``.
 
 Usage:
     python tools/opt_probe.py [--sf-dir /root/testdata/sf0.1] [--n 3]
-        [--plan-tag before|after] [--noop] names...
+        [--plan-tag before|after] [--plan-dir r15] [names...]
 
-- default drain is ``collect()`` (bench-identical; catalog results are
-  driver-sized by construction).  ``--noop`` additionally times a
-  noop-sink drain (guide §1.4) for entries where collect cost could
-  mask plan cost.
-- ``--plan-tag X`` writes ``plans/r14/<name>_X.txt`` with the formatted
-  plan of the entry's FINAL DataFrame.  For iterative (eager_build)
-  entries this shows the post-loop plan over LogicalRDD checkpoints;
-  loop-body plans are captured per-entry where a claim needs them.
+``--plan-tag X`` also writes ``plans/<plan-dir>/<name>_X.txt`` with the
+formatted plan of the entry's final DataFrame.  For iterative entries this
+is the post-loop plan over checkpoints; ``tools/loop_plan_dump.py`` dumps
+the round bodies.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import sys
-import time
+from dataclasses import asdict
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -35,6 +31,7 @@ sys.path.insert(0, str(REPO))
 
 from state_economics_end_to_end_data_pipeline_spark.plans import load_all  # noqa: E402
 from state_economics_end_to_end_data_pipeline_spark.session import get_spark  # noqa: E402
+from tools.probekit import label, timed  # noqa: E402
 
 
 def main() -> int:
@@ -43,8 +40,7 @@ def main() -> int:
     ap.add_argument("--n", type=int, default=3)
     ap.add_argument("--plan-tag", default=None)
     ap.add_argument("--plan-dir", default="r15")
-    ap.add_argument("--noop", action="store_true")
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("names", nargs="*")
     args = ap.parse_args()
     if args.n < 1:
         print("--n must be >= 1", file=sys.stderr)
@@ -52,7 +48,8 @@ def main() -> int:
 
     spark = get_spark(app_name="opt-probe")
     qs = load_all()
-    unknown = [n for n in args.names if n not in qs]
+    names = args.names or sorted(qs)
+    unknown = [n for n in names if n not in qs]
     if unknown:
         print(f"unknown entries: {unknown}", file=sys.stderr)
         return 2
@@ -60,29 +57,14 @@ def main() -> int:
     spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").count()
     spark.range(32).mapInPandas(lambda it: it, schema="id long").count()
 
-    for name in args.names:
+    master = label(spark)
+    for name in names:
         spark.catalog.clearCache()
-        times, noop_times, first = [], [], None
-        for i in range(args.n):
-            t0 = time.perf_counter()
-            df = qs[name].fn(spark, args.sf_dir)
-            rows = df.collect()
-            dt = time.perf_counter() - t0
-            times.append(dt)
-            if i == 0:
-                first = dt
-            if args.noop:
-                t0 = time.perf_counter()
-                df2 = qs[name].fn(spark, args.sf_dir)
-                df2.write.format("noop").mode("overwrite").save()
-                noop_times.append(time.perf_counter() - t0)
-        msg = (
-            f"{name}: min={min(times):.3f}s first={first:.3f}s "
-            f"all={[round(t, 3) for t in times]} rows={len(rows)}"
-        )
-        if noop_times:
-            msg += f" noop_min={min(noop_times):.3f}s"
-        print(msg)
+        t = timed(lambda: qs[name].fn(spark, args.sf_dir), args.n)
+        print(json.dumps({"entry": name, "master": master, **{
+            k: round(v, 3) if isinstance(v, float) else v
+            for k, v in asdict(t).items()
+        }}), flush=True)
         if args.plan_tag:
             out = REPO / "plans" / args.plan_dir / f"{name}_{args.plan_tag}.txt"
             out.parent.mkdir(parents=True, exist_ok=True)
@@ -90,7 +72,7 @@ def main() -> int:
             out.write_text(df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             ))
-            print(f"  plan -> {out.relative_to(REPO)}")
+            print(f"# plan -> {out.relative_to(REPO)}", file=sys.stderr)
     return 0
 
 

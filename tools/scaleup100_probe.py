@@ -44,8 +44,8 @@ plan.
 
 Usage: python tools/scaleup100_probe.py [--base /root/testdata/sf0.1]
                                         [--replicas 100] [names...]
-Appends/replaces the "## 100x probe" section of docs/SCALEUP.md and
-prints one JSON line per query.
+Prints one JSON line per query and writes the "## 100x probe" section of
+docs/SCALEUP.md (a run over named entries merges their rows into it).
 """
 
 from __future__ import annotations
@@ -54,11 +54,12 @@ import argparse
 import json
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from tools.probekit import label, timed, write_section  # noqa: E402
 
 HEAVY = [
     "ngram_jaccard_pairs",
@@ -694,47 +695,41 @@ def main() -> int:
     from state_economics_end_to_end_data_pipeline_spark.plans import load_all
     from state_economics_end_to_end_data_pipeline_spark.session import get_spark
 
-    from tools.scaleup_probe import time_query
-
     spark = get_spark(app_name="scaleup100-probe")
     qs = load_all()
     names = args.names or HEAVY
 
     big = tempfile.mkdtemp(prefix="scaleup_100x_")
     print(f"# building {args.replicas}x replicas in {big}", file=sys.stderr)
-    t0 = time.perf_counter()
     build_100x(spark, args.base, big, args.replicas)
-    print(f"# built in {time.perf_counter() - t0:.0f}s", file=sys.stderr)
 
     rows = []
     for name in names:
-        t_small, r_small = time_query(qs[name].fn, spark, args.base, reps=2)
-        t_big, r_big = time_query(qs[name].fn, spark, big, reps=1)
+        small = timed(lambda: qs[name].fn(spark, args.base), reps=2)
+        large = timed(lambda: qs[name].fn(spark, big), reps=1)
         c_small = CAND_FNS[name](spark, args.base) if name in CAND_FNS else None
         c_big = CAND_FNS[name](spark, big) if name in CAND_FNS else None
         row = {
             "query": name,
-            "sec_1x": round(t_small, 2),
-            "sec_100x": round(t_big, 2),
-            "ratio": round(t_big / t_small, 2),
-            "rows_1x": r_small,
-            "rows_100x": r_big,
+            "sec_1x": round(small.best_s, 2),
+            "sec_100x": round(large.best_s, 2),
+            "ratio": round(large.best_s / small.best_s, 2),
+            "rows_1x": small.rows,
+            "rows_100x": large.rows,
             "cand_1x": c_small,
             "cand_100x": c_big,
             "cand_ratio": (
                 round(c_big / c_small, 2) if c_small and c_big else None
             ),
         }
-        if r_small == 0 or r_big == 0:
-            row["EMPTY_RESULT"] = {"rows_1x": r_small, "rows_100x": r_big}
         rows.append(row)
         print(json.dumps(row))
 
+    empty = [r for r in rows if r["rows_1x"] == 0 or r["rows_100x"] == 0]
     md = [
-        SECTION_HEADER,
         "",
         f"Generated by `python tools/scaleup100_probe.py` ({args.replicas}x",
-        "replicas, local[32]; 1x = min-of-2, 100x = single run). Replicas",
+        f"replicas, {label(spark)}; 1x = min-of-2, 100x = single run). Replicas",
         "model a real 100x corpus at CONSTANT duplication rate: documents",
         "are token-salted per replica (disjoint gram spaces), lineitem",
         "shifts both order AND part keys (100 disjoint graph copies,",
@@ -753,7 +748,7 @@ def main() -> int:
         c1 = f"{r['cand_1x']:,}" if r["cand_1x"] is not None else "-"
         c2 = f"{r['cand_100x']:,}" if r["cand_100x"] is not None else "-"
         ratio = f"{r['ratio']}x"
-        if "EMPTY_RESULT" in r:
+        if r in empty:
             ratio += " EMPTY"
         row_lines[r["query"]] = (
             f"| {r['query']} | {r['sec_1x']} | {r['sec_100x']} | {ratio} "
@@ -803,53 +798,8 @@ def main() -> int:
         "entry's point, vs K separate edge scans for serial PPR).",
     ]
 
-    out_path = REPO / "docs" / "SCALEUP.md"
-    text = out_path.read_text() if out_path.exists() else ""
-    if args.names and SECTION_HEADER in text:
-        # Subset run: MERGE rows into the existing section's table
-        # instead of clobbering the full-run record (the same contract
-        # as scaleup_probe.py's main-table merge) -- replace a probed
-        # name's row in place, append new names after the last row,
-        # keep the prose untouched.
-        head, _, rest = text.partition(SECTION_HEADER)
-        nxt = rest.find("\n## ")
-        section, tail = (
-            (rest[: nxt + 1], rest[nxt + 1:]) if nxt != -1 else (rest, "")
-        )
-        lines = section.splitlines()
-        new_rows = dict(row_lines)
-        table_idx = [
-            i
-            for i, l in enumerate(lines)
-            if l.startswith("| ") and not l.startswith("|---")
-            and not l.startswith("| query |")
-        ]
-        if not table_idx:
-            raise SystemExit("100x section has no table to merge into")
-        for i in table_idx:
-            name = lines[i].split("|")[1].strip().strip("`")
-            if name in new_rows:
-                lines[i] = new_rows.pop(name)
-        insert_at = table_idx[-1] + 1
-        for line in new_rows.values():
-            lines.insert(insert_at, line)
-            insert_at += 1
-        text = head + SECTION_HEADER + "\n".join(lines) + "\n" + tail
-        print(
-            f"merged {len(rows)} row(s) into existing 100x section",
-            file=sys.stderr,
-        )
-    elif SECTION_HEADER in text:
-        # full run: replace the existing section (idempotent reruns)
-        head, _, rest = text.partition(SECTION_HEADER)
-        nxt = rest.find("\n## ")
-        tail = rest[nxt + 1:] if nxt != -1 else ""
-        text = head + "\n".join(md) + "\n\n" + tail
-    else:
-        text = text.rstrip("\n") + "\n\n" + "\n".join(md) + "\n"
-    out_path.write_text(text)
-    print("updated docs/SCALEUP.md (100x section)", file=sys.stderr)
-    return 2 if any("EMPTY_RESULT" in r for r in rows) else 0
+    write_section(SECTION_HEADER, md, merge_rows=row_lines if args.names else None)
+    return 2 if empty else 0
 
 
 if __name__ == "__main__":

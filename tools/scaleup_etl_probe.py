@@ -11,7 +11,8 @@ and verifies partition PRUNING on the published output (a Year-filtered
 read must list only matching Year=N directories -- PartitionFilters in
 the plan and a pruned file count).
 
-Writes one "## ETL scale probe" section to docs/SCALEUP.md.
+Prints one JSON line and writes the "## ETL scale probe: full pipeline"
+section of docs/SCALEUP.md.
 
 Usage: python tools/scaleup_etl_probe.py [--n-states 21000]
 """
@@ -27,7 +28,8 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
-sys.path.insert(0, str(REPO / "perfbench"))
+
+from tools.probekit import label, tree_cpu_s, write_section  # noqa: E402
 
 SECTION_HEADER = "## ETL scale probe: full pipeline at ~1000x fixture"
 
@@ -44,8 +46,6 @@ def main() -> int:
     from state_economics_end_to_end_data_pipeline_spark.pipelines.economics import (
         EconomicsETL,
     )
-    from measure import tree_cpu_s  # CPU seconds of this process, the JVM and its workers
-
     from state_economics_end_to_end_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="etl-scale-probe")
@@ -111,10 +111,8 @@ def main() -> int:
     print(json.dumps(row))
 
     md = [
-        SECTION_HEADER,
         "",
-        f"Generated by `python tools/scaleup_etl_probe.py` "
-        f"(local[{spark.sparkContext.defaultParallelism}]).",
+        f"Generated by `python tools/scaleup_etl_probe.py` ({label(spark)}).",
         f"Fixture: reference-shaped rawfiles at n_states={args.n_states:,}",
         "(same banner/footer rows, (D)/(L)/(NA) sentinels, cp1252 bytes,",
         "'$'-strings -- only the jurisdiction list grows), i.e.",
@@ -140,17 +138,7 @@ def main() -> int:
         "directory's files -- the pruning a 1000-executor reader needs.",
     ]
 
-    out_path = REPO / "docs" / "SCALEUP.md"
-    text = out_path.read_text() if out_path.exists() else ""
-    if SECTION_HEADER in text:
-        head, _, rest = text.partition(SECTION_HEADER)
-        nxt = rest.find("\n## ")
-        tail = rest[nxt + 1 :] if nxt != -1 else ""
-        text = head + "\n".join(md) + "\n\n" + tail
-    else:
-        text = text.rstrip("\n") + "\n\n" + "\n".join(md) + "\n"
-    out_path.write_text(text)
-    print(f"# wrote {SECTION_HEADER!r}", file=sys.stderr)
+    write_section(SECTION_HEADER, md)
     return 0
 
 

@@ -32,8 +32,8 @@ clique/path adjacency is expressed as two identical orders per basket,
 so every intended edge has co-occurrence count exactly 2.
 
 Usage: python tools/scaleup_graph_probe.py
-Appends/replaces the "## Graph-depth probe" section of docs/SCALEUP.md
-and prints one JSON line per run.
+Prints one JSON line per run and writes the "## Graph-depth probe" section
+of docs/SCALEUP.md.
 """
 
 from __future__ import annotations
@@ -41,11 +41,12 @@ from __future__ import annotations
 import json
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from tools.probekit import label, timed, write_section  # noqa: E402
 
 SECTION_HEADER = "## Graph-depth probe: rounds-to-fixpoint vs graph depth"
 
@@ -114,19 +115,15 @@ def main() -> int:
     def run(entry: str, build_fn, shape_desc: str, **kw) -> None:
         d = tempfile.mkdtemp(prefix="graphdepth_")
         shape = build_fn(spark, d, **kw)
-        t0 = time.perf_counter()
-        out = qs[entry].fn(spark, d).collect()
-        wall = round(time.perf_counter() - t0, 2)
+        t = timed(lambda: qs[entry].fn(spark, d))
         row = {
             "query": entry,
             "shape": shape_desc,
             **shape,
             "rounds": ga.LAST_ROUNDS.get(entry),
-            "sec": wall,
-            "out_rows": len(out),
+            "sec": round(t.best_s, 2),
+            "out_rows": t.rows,
         }
-        if not out:
-            row["EMPTY_RESULT"] = True
         rows.append(row)
         print(json.dumps(row))
 
@@ -176,9 +173,8 @@ def main() -> int:
     )
 
     md = [
-        SECTION_HEADER,
         "",
-        "Generated by `python tools/scaleup_graph_probe.py` (local[32]).",
+        f"Generated by `python tools/scaleup_graph_probe.py` ({label(spark)}).",
         "Depth replicas, not volume replicas: chain-of-cliques (diameter",
         "= chain length) for CC, anchored paths (peel depth = path",
         "length) for k-core; every adjacency is two identical orders so",
@@ -221,19 +217,8 @@ def main() -> int:
         "chain, which no value iteration can beat without doubling.",
     ]
 
-    out_path = REPO / "docs" / "SCALEUP.md"
-    text = out_path.read_text() if out_path.exists() else ""
-    if SECTION_HEADER in text:
-        head, _, rest = text.partition(SECTION_HEADER)
-        nxt = rest.find("\n## ")
-        tail = rest[nxt + 1 :] if nxt != -1 else ""
-        text = head + "\n".join(md) + "\n\n" + tail
-    else:
-        text = text.rstrip("\n") + "\n\n" + "\n".join(md) + "\n"
-    out_path.write_text(text)
-    print(f"# wrote {SECTION_HEADER!r} section ({len(rows)} rows)", file=sys.stderr)
-    empties = [r for r in rows if r.get("EMPTY_RESULT")]
-    return 2 if empties else 0
+    write_section(SECTION_HEADER, md)
+    return 2 if any(r["out_rows"] == 0 for r in rows) else 0
 
 
 if __name__ == "__main__":

@@ -10,7 +10,9 @@ get shifted users + timestamps (so session/window state grows with data,
 as it would in production). Dims are copied as-is.
 
 Usage: python tools/scaleup_probe.py [--base /root/testdata/sf0.1] [names...]
-Writes docs/SCALEUP.md and prints one JSON line per query.
+Prints one JSON line per query and writes its sections of docs/SCALEUP.md:
+the leading 10x table (a run over named entries merges their rows into it)
+and, when their entries ran, the skew-bomb and hub-part sections.
 """
 
 from __future__ import annotations
@@ -19,11 +21,14 @@ import argparse
 import json
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from tools.probekit import label, timed, write_section  # noqa: E402
+
+HEADER = "# Measured 10x scale-up (sf0.1 -> synthetic sf1)"
 
 PROBES = [
     "q1_pricing_summary",
@@ -197,15 +202,18 @@ PROBES = [
 REPLICAS = 10
 
 
+def empty(r: dict) -> bool:
+    """Zero rows at either scale: the probe timed nothing (the round-7
+    streaming glob-vs-directory bug read this way)."""
+    return r["rows_1x"] == 0 or r["rows_10x"] == 0
+
+
 def fmt_table_row(r: dict) -> str:
-    """One markdown row for the main SCALEUP table. EMPTY_RESULT probes
-    (zero rows at either scale -- the probe timed nothing) are annotated
-    in the ratio cell so they can never masquerade as a healthy ratio in
-    the persistent evidence file."""
+    """One markdown row for the main SCALEUP table; an empty result is
+    marked in the ratio cell so it never reads as a healthy ratio."""
     ratio = f"{r['ratio']}x"
-    if "EMPTY_RESULT" in r:
-        er = r["EMPTY_RESULT"]
-        ratio += f" EMPTY(rows_1x={er['rows_1x']}, rows_10x={er['rows_10x']})"
+    if empty(r):
+        ratio += f" EMPTY(rows_1x={r['rows_1x']}, rows_10x={r['rows_10x']})"
     return f"| {r['query']} | {r['sec_1x']} | {r['sec_10x']} | {ratio} |"
 
 
@@ -260,16 +268,6 @@ def build_10x(spark, base: str, out: str) -> None:
         )
 
 
-def time_query(fn, spark, sf_dir: str, reps: int = 2) -> tuple[float, int]:
-    best, n_rows = None, 0
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        n_rows = len(fn(spark, sf_dir).collect())
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return best, n_rows
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default="/root/testdata/sf0.1")
@@ -289,19 +287,16 @@ def main() -> int:
 
     rows = []
     for name in names:
-        t_small, n_small = time_query(qs[name].fn, spark, args.base)
-        t_big, n_big = time_query(qs[name].fn, spark, big)
+        small = timed(lambda: qs[name].fn(spark, args.base), reps=2)
+        large = timed(lambda: qs[name].fn(spark, big), reps=2)
         row = {
             "query": name,
-            "sec_1x": round(t_small, 2),
-            "sec_10x": round(t_big, 2),
-            "ratio": round(t_big / t_small, 2),
+            "sec_1x": round(small.best_s, 2),
+            "sec_10x": round(large.best_s, 2),
+            "ratio": round(large.best_s / small.best_s, 2),
+            "rows_1x": small.rows,
+            "rows_10x": large.rows,
         }
-        # a probe timing an empty result is measuring nothing: flag it
-        # loudly so a silently-empty source (the round-7 streaming
-        # glob-vs-directory bug) can never masquerade as a good ratio
-        if n_small == 0 or n_big == 0:
-            row["EMPTY_RESULT"] = {"rows_1x": n_small, "rows_10x": n_big}
         rows.append(row)
         print(json.dumps(row))
 
@@ -333,11 +328,10 @@ def main() -> int:
         li.unionByName(bomb_rows).write.mode("overwrite").parquet(
             f"{skew_dir}/lineitem.parquet"
         )
-        t_cap, _ = time_query(market_basket_pairs, spark, skew_dir)
-        t_uncap, _ = time_query(
-            lambda s, d: market_basket_pairs(s, d, max_basket=10**9),
-            spark, skew_dir,
-        )
+        t_cap = timed(lambda: market_basket_pairs(spark, skew_dir), reps=2).best_s
+        t_uncap = timed(
+            lambda: market_basket_pairs(spark, skew_dir, max_basket=10**9), reps=2
+        ).best_s
         skew_rows.append(
             {
                 "scenario": f"10x + one {bomb}-part basket",
@@ -425,11 +419,10 @@ def main() -> int:
             )
             .first()
         )
-        t_deg, _ = time_query(copurchase_triangles, spark, hub_dir)
-        t_id, _ = time_query(
-            lambda s, d: copurchase_triangles(s, d, orientation="id"),
-            spark, hub_dir,
-        )
+        t_deg = timed(lambda: copurchase_triangles(spark, hub_dir), reps=2).best_s
+        t_id = timed(
+            lambda: copurchase_triangles(spark, hub_dir, orientation="id"), reps=2
+        ).best_s
         tri_rows.append(
             {
                 "scenario": f"10x + one hub part in {hub_orders:,} baskets",
@@ -445,59 +438,15 @@ def main() -> int:
         print(json.dumps(tri_rows[-1]))
         edges.unpersist()
 
-    out_path = REPO / "docs" / "SCALEUP.md"
-    if args.names and out_path.exists():
-        # Subset run: MERGE into the existing record instead of clobbering
-        # it (the explain_dump trap: a names-argument rewrite that keeps
-        # only the probed rows silently deletes everyone else's evidence).
-        existing = out_path.read_text().splitlines()
-        fmt = {r["query"]: fmt_table_row(r) for r in rows}
-        # Match/append only within the FIRST markdown table: a probed name
-        # that happens to appear in a later section (skew/hub tables) must
-        # not hijack the append point.
-        last_row_idx = None
-        in_table = False
-        for i, line in enumerate(existing):
-            # "|" catches the |---| separator too -- it must not end the
-            # table scan
-            is_row = line.startswith("|")
-            if in_table and not is_row:
-                break  # first table ended; later tables are out of scope
-            cells = [c.strip() for c in line.split("|")]
-            if is_row and len(cells) >= 5:
-                in_table = True
-                if cells[1].startswith("-") or cells[1] == "query":
-                    continue
-                if cells[1] in fmt:
-                    existing[i] = fmt.pop(cells[1])
-                last_row_idx = i
-        if last_row_idx is None:
-            raise SystemExit("SCALEUP.md has no main table to merge into")
-        # names never probed before: append to the main table, keeping the
-        # table contiguous
-        while last_row_idx + 1 < len(existing) and existing[
-            last_row_idx + 1
-        ].startswith("| "):
-            last_row_idx += 1
-        for line in fmt.values():
-            existing.insert(last_row_idx + 1, line)
-            last_row_idx += 1
-        out_path.write_text("\n".join(existing) + "\n")
-        print(f"merged {len(rows)} row(s) into docs/SCALEUP.md", file=sys.stderr)
-        return 2 if any("EMPTY_RESULT" in r for r in rows) else 0
-
-    md = [
-        "# Measured 10x scale-up (sf0.1 -> synthetic sf1)",
+    table = {r["query"]: fmt_table_row(r) for r in rows}
+    write_section(HEADER, [
         "",
         "Generated by `python tools/scaleup_probe.py` (key-shifted 10x",
-        f"replicas, local[32], min-of-2). Base: `{args.base}`.",
+        f"replicas, {label(spark)}, min-of-2). Base: `{args.base}`.",
         "",
         "| query | 1x sec | 10x sec | ratio |",
         "|---|---|---|---|",
-    ]
-    for r in rows:
-        md.append(fmt_table_row(r))
-    md += [
+        *table.values(),
         "",
         "Reading: ratios near 1x are overhead-dominated plans (shuffle is",
         "O(groups), fixed job costs dominate at this scale); honest",
@@ -513,11 +462,9 @@ def main() -> int:
         "therefore strongly sublinear per edge and per output row; on a true",
         "10x corpus (co-occurrence rates preserved) the edge set grows ~10x",
         "and the join work with it.",
-    ]
+    ], merge_rows=table if args.names else None)
     if skew_rows:
-        md += [
-            "",
-            "## Skew-bomb probe: market_basket_pairs basket cap",
+        write_section("## Skew-bomb probe: market_basket_pairs basket cap", [
             "",
             "The 10x replicas preserve basket sizes, so the in-plan cap",
             "(`MAX_BASKET_SIZE`, plans/event_analytics.py) is invisible in the",
@@ -529,16 +476,14 @@ def main() -> int:
             "",
             "| scenario | capped sec | uncapped sec | pairs from bomb if uncapped |",
             "|---|---|---|---|",
-        ]
-        for r in skew_rows:
-            md.append(
+            *(
                 f"| {r['scenario']} | {r['capped_sec']} | {r['uncapped_sec']} "
                 f"| {r['uncapped_pairs_from_bomb']:,} |"
-            )
+                for r in skew_rows
+            ),
+        ])
     if tri_rows:
-        md += [
-            "",
-            "## Hub-part probe: copurchase_triangles orientation",
+        write_section("## Hub-part probe: copurchase_triangles orientation", [
             "",
             "One hub part injected into 10k baskets of the 10x lineitem",
             "(hub degree = its co-purchase-graph edge count below). The",
@@ -561,17 +506,15 @@ def main() -> int:
             "| scenario | hub degree | max key fan-out (id) | max key fan-out (degree) "
             "| total wedges (id) | total wedges (degree) | degree sec | id sec |",
             "|---|---|---|---|---|---|---|---|",
-        ]
-        for r in tri_rows:
-            md.append(
+            *(
                 f"| {r['scenario']} | {r['hub_degree']:,} "
                 f"| {r['id_max_key_fanout']:,} | {r['deg_max_key_fanout']:,} "
                 f"| {r['id_total_wedges']:,} | {r['deg_total_wedges']:,} "
                 f"| {r['degree_oriented_sec']} | {r['id_oriented_sec']} |"
-            )
-    (REPO / "docs" / "SCALEUP.md").write_text("\n".join(md) + "\n")
-    print("wrote docs/SCALEUP.md", file=sys.stderr)
-    return 2 if any("EMPTY_RESULT" in r for r in rows) else 0
+                for r in tri_rows
+            ),
+        ])
+    return 2 if any(map(empty, rows)) else 0
 
 
 if __name__ == "__main__":

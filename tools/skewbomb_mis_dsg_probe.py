@@ -1,8 +1,8 @@
 """Skew-bomb probe for the r11 graph additions (r11 verdict ask #4):
 `mis_parts_luby` and `densest_subgraph_peel` have round-count bounds but
 had no injected-hub timing row.  Same star+ring bomb as the h-index
-probe (`skewbomb_probe.build_star_ring`): ONE node of degree 1e5, every
-other node degree 3.
+probe (`probekit.star_ring`): ONE node of degree 1e5, every other node
+degree 3.
 
 What each entry's round does at the hub, and the naive alternative we
 time against (the market-basket-cap / h-index probe template):
@@ -26,8 +26,8 @@ O(log) rounds; the peel terminates in 2 changing rounds and returns the
 whole graph (star+ring is its own densest set: density 4n/(2(n+1)) ~ 2,
 and every peel step only removes density).
 
-Writes a '## skew-bomb probe: Luby MIS + densest-peel rounds on a
-1e5-degree hub' section into docs/SCALEUP.md and prints one JSON line.
+Prints one JSON line and writes the '## skew-bomb probe: Luby MIS +
+densest-peel rounds on a 1e5-degree hub' section of docs/SCALEUP.md.
 
 Usage: python tools/skewbomb_mis_dsg_probe.py [--hub-degree 100000] [--reps 3]
 """
@@ -37,12 +37,12 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
-sys.path.insert(0, str(REPO / "tools"))
+
+from tools.probekit import label, star_ring, timed, write_section  # noqa: E402
 
 SECTION_HEADER = (
     "## skew-bomb probe: Luby MIS + densest-peel rounds on a 1e5-degree hub"
@@ -57,7 +57,6 @@ def main() -> int:
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from skewbomb_probe import build_star_ring
 
     from state_economics_end_to_end_data_pipeline_spark.plans.graph_analytics import (
         greedy_densest_subgraph,
@@ -66,7 +65,7 @@ def main() -> int:
 
     spark = get_spark(app_name="skewbomb-mis-dsg-probe")
     n = args.hub_degree
-    edges = build_star_ring(spark, n).localCheckpoint()
+    edges = star_ring(spark, n).localCheckpoint()
     n_edges = edges.count()
     pri = (
         edges.select(F.col("src").alias("node"))
@@ -76,33 +75,37 @@ def main() -> int:
     )
     npri = pri.select(F.col("node").alias("dst"), F.col("pri").alias("npri"))
 
-    # --- Luby round-1 candidate set, both formulations (all nodes active)
-    def luby_cand_agg():
-        nbmin = (
-            edges.join(npri, "dst")
-            .groupBy("src")
-            .agg(F.min("npri").alias("minp"))
-            .withColumnRenamed("src", "node")
-        )
+    # --- Luby candidates: active nodes whose priority beats every
+    # neighbor's; the neighbor minimum as an aggregate or as a sort window
+    def candidates(act, nbmin):
         return (
-            pri.join(nbmin, "node", "left_outer")
+            act.join(nbmin, "node", "left_outer")
             .filter(F.col("minp").isNull() | (F.col("pri") < F.col("minp")))
             .select("node")
         )
 
-    def luby_cand_windowed():
+    def nbmin_agg(e):
+        return (
+            e.join(npri, "dst")
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.min("npri").alias("minp"))
+        )
+
+    def nbmin_windowed(e):
         w = Window.partitionBy("src").orderBy("npri")
-        nbmin = (
-            edges.join(npri, "dst")
+        return (
+            e.join(npri, "dst")
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(F.col("src").alias("node"), F.col("npri").alias("minp"))
         )
-        return (
-            pri.join(nbmin, "node", "left_outer")
-            .filter(F.col("minp").isNull() | (F.col("pri") < F.col("minp")))
-            .select("node")
-        )
+
+    # round 1, all nodes active
+    def luby_cand_agg():
+        return candidates(pri, nbmin_agg(edges))
+
+    def luby_cand_windowed():
+        return candidates(pri, nbmin_windowed(edges))
 
     # --- peel degree stage, both formulations
     nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
@@ -126,27 +129,16 @@ def main() -> int:
             .select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
         )
 
-    def timed(builder):
-        best = None
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            builder().collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return best
-
     # identical results first (the delta must isolate the skew surface)
-    if luby_cand_agg().exceptAll(luby_cand_windowed()).count() or \
-       luby_cand_windowed().exceptAll(luby_cand_agg()).count():
-        raise SystemExit("luby candidate sets differ between formulations")
-    if deg_agg().exceptAll(deg_windowed()).count() or \
-       deg_windowed().exceptAll(deg_agg()).count():
-        raise SystemExit("degree relations differ between formulations")
+    for what, a, b in (("luby candidate sets", luby_cand_agg, luby_cand_windowed),
+                       ("degree relations", deg_agg, deg_windowed)):
+        if a().exceptAll(b()).count() or b().exceptAll(a()).count():
+            raise SystemExit(f"{what} differ between formulations")
 
-    t_luby_agg = timed(luby_cand_agg)
-    t_luby_win = timed(luby_cand_windowed)
-    t_deg_agg = timed(deg_agg)
-    t_deg_win = timed(deg_windowed)
+    t_luby_agg = timed(luby_cand_agg, args.reps).best_s
+    t_luby_win = timed(luby_cand_windowed, args.reps).best_s
+    t_deg_agg = timed(deg_agg, args.reps).best_s
+    t_deg_win = timed(deg_windowed, args.reps).best_s
 
     # the load-bearing asymmetry: rows ONE task must hold for the hub.
     # Aggregate formulations reduce the hub's fan-in map-side (a hub is
@@ -165,18 +157,7 @@ def main() -> int:
             edges.join(act.select(F.col("node").alias("src")), "src", "leftsemi")
             .join(act.select(F.col("node").alias("dst")), "dst", "leftsemi")
         )
-        nbmin_r = (
-            eact.join(npri, "dst")
-            .groupBy("src")
-            .agg(F.min("npri").alias("minp"))
-            .withColumnRenamed("src", "node")
-        )
-        cand = (
-            act.join(nbmin_r, "node", "left_outer")
-            .filter(F.col("minp").isNull() | (F.col("pri") < F.col("minp")))
-            .select("node")
-            .localCheckpoint()
-        )
+        cand = candidates(act, nbmin_agg(eact)).localCheckpoint()
         mis = cand if mis is None else mis.unionByName(cand)
         killed = cand.unionByName(
             eact.join(cand.select(F.col("node").alias("src")), "src", "leftsemi")
@@ -240,10 +221,9 @@ def main() -> int:
     print(json.dumps(row))
 
     md = [
-        SECTION_HEADER,
         "",
         "Generated by `python tools/skewbomb_mis_dsg_probe.py` (min-of-"
-        f"{args.reps}, local[32]).  Same star+ring bomb as the h-index "
+        f"{args.reps}, {label(spark)}).  Same star+ring bomb as the h-index "
         f"probe: ONE node of degree {n:,}, {n_edges:,} directed edges.  "
         "'agg' is the registered formulation (neighbor-min / degree as a "
         "map-side-combined HASH AGGREGATE -- the hub is one aggregate "
@@ -262,7 +242,7 @@ def main() -> int:
         f"| peel degree stage | {row['sec_peel_degree_agg']} s "
         f"| {row['sec_peel_degree_windowed']} s | {hub_rows:,} -> 1 cell |",
         "",
-        "Reading: as with the h-index probe, local[32] walls are "
+        f"Reading: as with the h-index probe, {label(spark)} walls are "
         "shuffle-dominated, so the deltas understate the cluster-scale "
         "gap; the evidence column is 'hub rows in one task'.  The "
         "registered rounds never materialize a per-node sorted adjacency "
@@ -271,17 +251,7 @@ def main() -> int:
         "fan-in stays absorbed by map-side combine.",
     ]
 
-    out_path = REPO / "docs" / "SCALEUP.md"
-    text = out_path.read_text() if out_path.exists() else ""
-    if SECTION_HEADER in text:
-        head, _, rest = text.partition(SECTION_HEADER)
-        nxt = rest.find("\n## ")
-        tail = rest[nxt + 1:] if nxt != -1 else ""
-        text = head + "\n".join(md) + "\n\n" + tail
-    else:
-        text = text.rstrip("\n") + "\n\n" + "\n".join(md) + "\n"
-    out_path.write_text(text)
-    print("updated docs/SCALEUP.md (MIS/peel skew-bomb section)", file=sys.stderr)
+    write_section(SECTION_HEADER, md)
     return 0
 
 

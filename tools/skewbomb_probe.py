@@ -20,8 +20,8 @@ that make it the right bomb:
   iterations must converge to the constant-3 decomposition -- asserted,
   not assumed.
 
-Writes a '## skew-bomb probe: h-index round on a 1e5-degree hub'
-section into docs/SCALEUP.md and prints one JSON line.
+Prints one JSON line and writes the '## skew-bomb probe: h-index round on
+a 1e5-degree hub' section of docs/SCALEUP.md.
 
 Usage: python tools/skewbomb_probe.py [--hub-degree 100000] [--reps 3]
 """
@@ -31,49 +31,40 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tools.probekit import label, star_ring, timed, write_section  # noqa: E402
+
 SECTION_HEADER = "## skew-bomb probe: h-index round on a 1e5-degree hub"
 
 
-def build_star_ring(spark, n: int):
-    """Undirected star(hub=0, spokes 1..n) + ring over the spokes,
-    both directions, as a DataFrame(src, dst)."""
+def joined_estimates(edges, h):
+    """Each node's neighbor estimates: (node, nh) for every edge."""
     from pyspark.sql import functions as F
 
-    spokes = spark.range(1, n + 1).select(F.col("id").alias("i"))
-    star = spokes.select(F.lit(0).cast("bigint").alias("src"), F.col("i").alias("dst"))
-    ring = spokes.select(
-        F.col("i").alias("src"),
-        (F.col("i") % F.lit(n) + F.lit(1)).cast("bigint").alias("dst"),
+    return edges.join(h, edges.dst == h.node).select(
+        F.col("src").alias("node"), F.col("h").alias("nh")
     )
-    half = star.unionByName(ring)
-    return half.unionByName(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).repartition(32)
 
 
-def windowed_round(spark, edges, h):
+def windowed_tail(joined):
     """The r10 formulation: row_number over the FULL per-node adjacency
     (partition size == degree -- the hub sorts 1e5 rows in one task)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    w = Window.partitionBy("src").orderBy(F.col("nh").desc())
+    w = Window.partitionBy("node").orderBy(F.col("nh").desc())
     return (
-        edges.join(h, edges.dst == h.node)
-        .select("src", F.col("h").alias("nh"))
-        .withColumn("rn", F.row_number().over(w))
-        .groupBy(F.col("src").alias("node"))
+        joined.withColumn("rn", F.row_number().over(w))
+        .groupBy("node")
         .agg(F.max(F.least(F.col("rn").cast("bigint"), F.col("nh"))).alias("h"))
     )
 
 
-def histogram_round(spark, edges, h):
+def histogram_tail(joined):
     """The r11 formulation: hash-aggregate per (node, estimate), then a
     suffix-sum argmax over the distinct values (<= H0+1 rows per node
     under the capped start)."""
@@ -86,9 +77,7 @@ def histogram_round(spark, edges, h):
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        edges.join(h, edges.dst == h.node)
-        .select(F.col("src").alias("node"), F.col("h").alias("nh"))
-        .groupBy("node", "nh")
+        joined.groupBy("node", "nh")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .withColumn("s", F.sum("cnt").over(w))
         .groupBy("node")
@@ -96,20 +85,21 @@ def histogram_round(spark, edges, h):
     )
 
 
-def iterate_to_fixpoint(spark, edges, h, round_fn, cap: int = 50):
-    """Counts CHANGING rounds only (the LAST_ROUNDS convention: the
-    confirming no-change round is not counted), so the probe's rounds
-    column is directly comparable to bench-record last_rounds."""
-    rounds = 0
-    pot = h.agg({"h": "sum"}).collect()[0][0]
-    for _ in range(cap):
-        h = round_fn(spark, edges, h).localCheckpoint()
-        new_pot = h.agg({"h": "sum"}).collect()[0][0]
-        if new_pot == pot:
-            break
-        rounds += 1
-        pot = new_pot
-    return h, rounds
+def iterate_to_fixpoint(edges, h, tail, cap: int = 50):
+    """Runs rounds of ``tail`` until the sum of ``h`` repeats; returns the last
+    ``h`` and the CHANGING rounds (the LAST_ROUNDS convention), so the
+    rounds column compares directly with bench-record last_rounds."""
+    from pyspark.sql import functions as F
+
+    from state_economics_end_to_end_data_pipeline_spark.operators.loops import (
+        fixpoint,
+        materialize,
+    )
+
+    def step(h, _):
+        return materialize("skewbomb", tail(joined_estimates(edges, h)), F.sum("h"))
+
+    return fixpoint("skewbomb", step, (h, h.agg(F.sum("h")).first()[0]), cap)
 
 
 def main() -> int:
@@ -124,7 +114,7 @@ def main() -> int:
 
     spark = get_spark(app_name="skewbomb-probe")
     n = args.hub_degree
-    edges = build_star_ring(spark, n).localCheckpoint()
+    edges = star_ring(spark, n).localCheckpoint()
     n_edges = edges.count()
 
     deg = (
@@ -138,17 +128,8 @@ def main() -> int:
         "node", F.least(F.col("d"), F.lit(3)).cast("bigint").alias("h")
     ).localCheckpoint()
 
-    def time_round(fn, h0):
-        best = None
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            fn(spark, edges, h0).collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return best
-
-    t_win = time_round(windowed_round, h_deg)
-    t_hist = time_round(histogram_round, h_cap)
+    t_win = timed(lambda: windowed_tail(joined_estimates(edges, h_deg)), args.reps).best_s
+    t_hist = timed(lambda: histogram_tail(joined_estimates(edges, h_cap)), args.reps).best_s
 
     # END-TO-END round walls above are join-dominated at local scale
     # (the edge join is identical in both variants and costs the same
@@ -157,47 +138,9 @@ def main() -> int:
     # materialized joined relation -- windowed: one task sorts the
     # hub's N rows; histogram: a distributed hash aggregate + a <=
     # (H0+1)-row window per node.
-    from pyspark.sql import Window
-
-    joined = (
-        edges.join(h_cap, edges.dst == h_cap.node)
-        .select(F.col("src").alias("node"), F.col("h").alias("nh"))
-        .localCheckpoint()
-    )
-
-    def windowed_tail():
-        w = Window.partitionBy("node").orderBy(F.col("nh").desc())
-        return (
-            joined.withColumn("rn", F.row_number().over(w))
-            .groupBy("node")
-            .agg(F.max(F.least(F.col("rn").cast("bigint"), F.col("nh"))).alias("h"))
-        )
-
-    def histogram_tail():
-        w = (
-            Window.partitionBy("node")
-            .orderBy(F.col("nh").desc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            joined.groupBy("node", "nh")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .withColumn("s", F.sum("cnt").over(w))
-            .groupBy("node")
-            .agg(F.max(F.least(F.col("nh"), F.col("s"))).alias("h"))
-        )
-
-    def time_tail(builder):
-        best = None
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            builder().collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return best
-
-    t_win_tail = time_tail(windowed_tail)
-    t_hist_tail = time_tail(histogram_tail)
+    joined = joined_estimates(edges, h_cap).localCheckpoint()
+    t_win_tail = timed(lambda: windowed_tail(joined), args.reps).best_s
+    t_hist_tail = timed(lambda: histogram_tail(joined), args.reps).best_s
 
     # The load-bearing asymmetry (the analog of the market-basket cap
     # probe's candidate counts): how many rows enter the per-node
@@ -213,8 +156,8 @@ def main() -> int:
 
     # correctness on the bomb: both FULL iterations converge to the
     # constant-3 coreness (star+ring degeneracy)
-    hw, r_win = iterate_to_fixpoint(spark, edges, h_deg, windowed_round)
-    hh, r_hist = iterate_to_fixpoint(spark, edges, h_cap, histogram_round)
+    hw, r_win = iterate_to_fixpoint(edges, h_deg, windowed_tail)
+    hh, r_hist = iterate_to_fixpoint(edges, h_cap, histogram_tail)
     for name, hdf in (("windowed", hw), ("histogram", hh)):
         bad = hdf.filter(F.col("h") != 3).count()
         if bad:
@@ -248,10 +191,9 @@ def main() -> int:
     print(json.dumps(row))
 
     md = [
-        SECTION_HEADER,
         "",
         "Generated by `python tools/skewbomb_probe.py` (min-of-"
-        f"{args.reps}, local[32]).  Synthetic star+ring: ONE node of "
+        f"{args.reps}, {label(spark)}).  Synthetic star+ring: ONE node of "
         f"degree {n:,}, {n_edges:,} directed edges, true coreness 3 "
         "everywhere (both variants' full iterations verified to land "
         "there).  'windowed' is the r10 coreness_hindex round "
@@ -274,10 +216,10 @@ def main() -> int:
         f"| {hub_rows_windowed:,} -> {hub_rows_histogram:,} "
         f"| {max_distinct} (bound H0+1 = 4) | {r_win}/{r_hist} |",
         "",
-        "Reading: at local[32] the walls are SHUFFLE-dominated and "
+        f"Reading: at {label(spark)} the walls are SHUFFLE-dominated and "
         "near-equal -- both variants move the same joined relation, "
         "and one in-memory sort of a few million near-equal values is "
-        "not a local bottleneck with 31 idle cores.  The load-bearing "
+        "not a local bottleneck with the other cores idle.  The load-bearing "
         "column is 'hub window rows': the quantity ONE task must hold "
         "and sort in the windowed round is the hub's full adjacency "
         "(grows with degree -- at 1e8 it is a spilling straggler that "
@@ -290,17 +232,7 @@ def main() -> int:
         "evidence.",
     ]
 
-    out_path = REPO / "docs" / "SCALEUP.md"
-    text = out_path.read_text() if out_path.exists() else ""
-    if SECTION_HEADER in text:
-        head, _, rest = text.partition(SECTION_HEADER)
-        nxt = rest.find("\n## ")
-        tail = rest[nxt + 1:] if nxt != -1 else ""
-        text = head + "\n".join(md) + "\n\n" + tail
-    else:
-        text = text.rstrip("\n") + "\n\n" + "\n".join(md) + "\n"
-    out_path.write_text(text)
-    print("updated docs/SCALEUP.md (skew-bomb section)", file=sys.stderr)
+    write_section(SECTION_HEADER, md)
     return 0
 
 
