@@ -59,13 +59,6 @@ def main() -> int:
     # (BASELINE.md documents the protocol).
     first_pass: dict[str, float] = {}
     for name in sorted(qs):
-        # Bound cached-partition accumulation across the 275-entry suite
-        # (r11 advice #3): a few lazily-returned plans cache intermediates
-        # they cannot unpersist themselves.  Cleared BETWEEN entries only
-        # -- never between an entry's two timed passes -- so min-of-2
-        # warmth is unaffected and every entry starts from the same cold
-        # cache state.
-        spark.catalog.clearCache()
         load_samples.append(round(os.getloadavg()[0], 2))
         best = None
         try:

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -149,10 +148,11 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     # reserved prefix; md5-suffixed because several sf_dirs can carry the
     # same table name within one session
     view = f"__sg_scan_{name}_{hashlib.md5(path.encode()).hexdigest()}"
-    try:
+    # tableExists, not spark.table + AnalysisException: once the session
+    # has used an Observation, a failed analysis makes Spark's
+    # observation listener log an ERROR with a stack trace
+    if spark.catalog.tableExists(view):
         return spark.table(view)
-    except AnalysisException:
-        pass  # the session's first read of this path
     from pyspark.sql import functions as F
 
     nanos_cols = _nanos_ts_columns(path)
@@ -191,8 +191,9 @@ def read_csv_with_quarantine(
 
     The corrupt-record column must be materialized before it can be
     filtered on its own (Spark disallows pruning a scan down to only the
-    internal corrupt column), hence the cache() -- one scan feeds both
-    halves of the split."""
+    internal corrupt column), hence the lazy ``localCheckpoint`` -- one
+    scan feeds both halves of the split, and its blocks are freed with
+    the frames (nothing enters the session's cache)."""
     corrupt_col = "_corrupt_record"
     full = T.StructType(
         list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
@@ -205,7 +206,7 @@ def read_csv_with_quarantine(
     )
     if encoding:
         reader = reader.option("encoding", encoding)
-    df = reader.csv(path).cache()
+    df = reader.csv(path).localCheckpoint(eager=False)
     from pyspark.sql import functions as F
 
     good = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)

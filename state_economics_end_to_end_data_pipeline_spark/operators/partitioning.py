@@ -23,20 +23,12 @@ from pyspark.sql import DataFrame
 # same table scans every bench pass; ``semanticHash`` (analysis only,
 # ~15 ms) keys the memo instead.  Plan METADATA only -- never data or
 # results; partition counts are stable within an app (same files, same
-# split confs).  Entries of dead apps are evicted; like readers' scan
-# views, the memo assumes the files at a path do not change (rewritten
-# fixtures need clear_npart_memo()).  semanticHash is 32-bit: a
-# collision would reuse another plan's partition count and mis-gate the
-# repartition -- a PERFORMANCE-only risk (never correctness:
-# rebalance_for_cpu returns row-identical data either way), accepted at
-# ~2e-10 per plan pair.
+# split confs).  Entries of dead apps are evicted.  A path rewritten
+# in-process, or a 32-bit semanticHash collision (~2e-10 per plan
+# pair), can only make the memo answer with a stale partition count and
+# mis-gate the repartition -- a PERFORMANCE risk, never a correctness
+# one: rebalance_for_cpu returns row-identical data either way.
 _NPART_MEMO: dict[tuple[str, int], int] = {}
-
-
-def clear_npart_memo() -> None:
-    """Drop memoized partition counts (for callers that rewrite parquet
-    fixtures in-process)."""
-    _NPART_MEMO.clear()
 
 
 def rebalance_for_cpu(df: DataFrame, target: int | None = None) -> DataFrame:

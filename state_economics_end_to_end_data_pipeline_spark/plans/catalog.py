@@ -892,13 +892,12 @@ def cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grouping_sets_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS with the grouping-id bitmask distinguishing
     which aggregation level each output row came from."""
-    n = t(spark, sf_dir, "nation")
-    n.createOrReplaceTempView("__gs_nation")
     return spark.sql(
         """
         SELECT n_regionkey, n_name, GROUPING_ID(n_regionkey, n_name) AS gid, COUNT(*) AS n
-        FROM __gs_nation GROUP BY GROUPING SETS ((n_regionkey), (n_name), ())
-        """
+        FROM {nation} GROUP BY GROUPING SETS ((n_regionkey), (n_name), ())
+        """,
+        nation=t(spark, sf_dir, "nation"),
     )
 
 
@@ -1626,16 +1625,16 @@ def sql_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-surface parity: correlated scalar subquery (Catalyst decorrelates
     it into an aggregate + join -- never a per-row re-execution). Issued
     through spark.sql to exercise the SQL front end, not the DataFrame DSL."""
-    t(spark, sf_dir, "customer").createOrReplaceTempView("__sq_customer")
     return spark.sql(
         """
         SELECT c_custkey, c_nationkey, c_acctbal
-        FROM __sq_customer c
+        FROM {customer} c
         WHERE c_acctbal > (
           SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) * 1.8
-          FROM __sq_customer c2 WHERE c2.c_nationkey = c.c_nationkey
+          FROM {customer} c2 WHERE c2.c_nationkey = c.c_nationkey
         )
-        """
+        """,
+        customer=t(spark, sf_dir, "customer"),
     )
 
 

@@ -2719,16 +2719,16 @@ def udtf_term_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.tables import register_udtfs
 
     register_udtfs(spark)
-    t(spark, sf_dir, "documents").createOrReplaceTempView("docs_udtf")
     return spark.sql(
         """
         SELECT t.term,
                COUNT(*) AS n_occurrences,
                COUNT(DISTINCT doc_id) AS n_docs
-        FROM docs_udtf, LATERAL term_explode(text) t
+        FROM {documents}, LATERAL term_explode(text) t
         GROUP BY t.term
         HAVING COUNT(*) >= 100
-        """
+        """,
+        documents=t(spark, sf_dir, "documents"),
     )
 
 
@@ -6126,15 +6126,7 @@ def token_kl_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "source", F.explode_outer(tokens("text")).alias("token")
     ).filter(F.col("token").isNotNull())
-    # cache the (source, token) aggregate: three downstream consumers
-    # (s_tot, ct, the KL join) must read ONE computation of it -- AQE's
-    # ReusedExchange is best-effort, the cache makes the single raw-token
-    # pass a guarantee (lazy: building the plan stays side-effect-free)
-    st = (
-        tok.groupBy("source", "token")
-        .agg(F.count(F.lit(1)).alias("n_st"))
-        .cache()
-    )
+    st = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("n_st"))
     s_tot = st.groupBy("source").agg(
         F.sum("n_st").alias("n_s"), F.count(F.lit(1)).alias("n_types")
     )
@@ -6824,7 +6816,7 @@ def kmeans_lloyd_exact2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.posexplode("embedding").alias("pos", "v")
     ).select(
         "vec_id", (F.col("pos") + 1).alias("dim"), F.col("v").cast("double").alias("val")
-    ).cache()
+    )
     c = dims.filter(F.col("vec_id") < _KM_K).select(
         F.col("vec_id").alias("cell"), "dim", F.col("val").alias("m")
     )

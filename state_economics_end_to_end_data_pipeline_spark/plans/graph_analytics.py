@@ -257,130 +257,6 @@ def pagerank_parts_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
 
 
-def _ppr_iter_sql(prev: str, out: str) -> str:
-    """One unrolled PERSONALIZED PageRank iteration: teleport mass goes
-    to the seed only (is_seed carried on the rank relation), contrib
-    sums decimal-exact like ``_iter_sql``."""
-    return f"""
-    {out} AS (
-      SELECT p.node,
-             CAST({(1 - _DAMP)!r} AS DOUBLE) * p.is_seed
-               + CAST({_DAMP!r} AS DOUBLE)
-                 * COALESCE(CAST(s.contrib AS DOUBLE), 0.0) AS rank,
-             p.is_seed
-      FROM {prev} p
-      LEFT JOIN (
-        SELECT e.dst AS node,
-               SUM(CAST(pp.rank / d.outdeg AS DECIMAL(38,18))) AS contrib
-        FROM edges e
-        JOIN {prev} pp ON e.src = pp.node
-        JOIN deg d ON e.src = d.src
-        GROUP BY e.dst
-      ) s ON s.node = p.node
-    )
-    """
-
-
-@register(
-    "ppr_parts_3iter",
-    oracle=f"""
-    WITH {_pair_edges_sql(threshold=2)},
-    seed AS (SELECT src AS node FROM deg ORDER BY outdeg DESC, src LIMIT 1),
-    p0 AS (
-      SELECT nodes.node,
-             CASE WHEN nodes.node = seed.node
-                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS rank,
-             CASE WHEN nodes.node = seed.node THEN 1 ELSE 0 END AS is_seed
-      FROM nodes CROSS JOIN seed
-    ),
-    {_ppr_iter_sql('p0', 'p1')},
-    {_ppr_iter_sql('p1', 'p2')},
-    {_ppr_iter_sql('p2', 'p3')}
-    SELECT node AS part, round(rank, 12) AS rank FROM p3 WHERE rank > 0
-    """,
-)
-def ppr_parts_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PERSONALIZED PageRank (3 iterations, d=0.85, restart at the
-    hub part): the graph-retrieval twin of ``pagerank_parts_3iter`` --
-    teleport mass returns to ONE seed instead of spreading uniformly,
-    so the stationary mass measures proximity TO THE SEED (the
-    'similar items via random walk' primitive behind co-purchase
-    recommendation and GraphSAGE-style neighborhood sampling).  The
-    seed is chosen in-plan (argmax degree, min-id tie-break,
-    broadcast 1-row join -- no driver collect), carried as an is_seed
-    flag on the narrow rank relation; each iteration is the same
-    edges-join + decimal-exact contribution aggregate as global
-    PageRank (one shuffle per round over the edge relation), and the
-    zero-mass tail is dropped at publish (rank > 0: nodes beyond 3
-    hops of the seed -- keeps the result proportional to the seed's
-    neighborhood at any graph size, exactly what a retrieval consumer
-    wants).  Lazy 3-round unroll like pagerank (the rank relation is
-    referenced once per round -- linear lineage, no localCheckpoint
-    needed, plan-only consumers stay safe).  Floats publish at 12
-    digits (the pagerank discipline).
-
-    The graph is the >=2-shared-orders co-purchase graph (denser than
-    global pagerank's threshold-3 one: probed, the threshold-3 graph
-    collapses to 4 nodes at sf0.1 and a seed neighborhood of 2 -- a
-    degenerate retrieval surface; at threshold 2 the seed's 3-hop
-    support is 12/255/200 nodes across the three SFs).
-
-    Reference parity: no graph operators in the reference
-    (DAG1:1-322); module docstring covers the family.
-    """
-    edges = _copurchase_edges(spark, sf_dir, threshold=2)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # r14: outdeg folded onto the cached edge relation once (the
-    # pagerank_parts_3iter rationale) -- one join per round, not two
-    ewd = edges.join(deg, "src").cache()
-    nodes = ewd.select(F.col("src").alias("node")).distinct()
-    seed = (
-        deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
-        .limit(1)
-        .select(F.col("src").alias("seed_node"))
-    )
-    # base carries (node, is_seed) and is the LEFT side of every
-    # round's rebuild, so the previous ranks relation is referenced
-    # exactly ONCE per iteration (inside contrib) -- linear lineage;
-    # joining prev ranks on both sides would duplicate the subtree
-    # 2^rounds times (the lazy-unroll trap graph_bfs_hops documents)
-    base = (
-        nodes.crossJoin(F.broadcast(seed))
-        .select(
-            "node",
-            F.when(F.col("node") == F.col("seed_node"), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("is_seed"),
-        )
-        .cache()
-    )
-    ranks = base.select(
-        "node", F.col("is_seed").cast("double").alias("rank"), "is_seed"
-    )
-    for _ in range(3):
-        contrib = (
-            ewd.join(ranks.select("node", "rank"), ewd.src == F.col("node"))
-            .groupBy("dst")
-            .agg(
-                F.sum((F.col("rank") / F.col("outdeg")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("contrib")
-            )
-        )
-        ranks = base.join(contrib, base.node == contrib.dst, "left_outer").select(
-            "node",
-            (
-                F.lit(1 - _DAMP) * F.col("is_seed")
-                + F.lit(_DAMP) * F.coalesce(F.col("contrib"), F.lit(0.0))
-            ).alias("rank"),
-            "is_seed",
-        )
-    return (
-        ranks.filter(F.col("rank") > 0)
-        .select(F.col("node").alias("part"), F.round("rank", 12).alias("rank"))
-    )
-
-
 _PPR_SEEDS = 3
 
 
@@ -408,14 +284,15 @@ def _ppr_ms_iter_sql(prev: str, out: str) -> str:
     """
 
 
-@register(
-    "ppr_multiseed",
-    oracle=f"""
+def _ppr_oracle(k: int, select: str) -> str:
+    """The unrolled 3-round oracle of ``ppr_multiseed`` with ``k`` seeds,
+    projecting ``select`` from the last round's positive ranks."""
+    return f"""
     WITH {_pair_edges_sql(threshold=2)},
     seeds AS (
       SELECT src AS seed_node,
              ROW_NUMBER() OVER (ORDER BY outdeg DESC, src) AS seed_id
-      FROM deg ORDER BY outdeg DESC, src LIMIT {_PPR_SEEDS}
+      FROM deg ORDER BY outdeg DESC, src LIMIT {k}
     ),
     p0 AS (
       SELECT s.seed_id, nodes.node,
@@ -427,13 +304,21 @@ def _ppr_ms_iter_sql(prev: str, out: str) -> str:
     {_ppr_ms_iter_sql('p0', 'p1')},
     {_ppr_ms_iter_sql('p1', 'p2')},
     {_ppr_ms_iter_sql('p2', 'p3')}
-    SELECT CAST(seed_id AS BIGINT) AS seed_id, node AS part,
-           round(rank, 12) AS rank
-    FROM p3 WHERE rank > 0
-    """,
+    SELECT {select} FROM p3 WHERE rank > 0
+    """
+
+
+@register(
+    "ppr_multiseed",
+    oracle=_ppr_oracle(
+        _PPR_SEEDS,
+        "CAST(seed_id AS BIGINT) AS seed_id, node AS part, round(rank, 12) AS rank",
+    ),
 )
-def ppr_multiseed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BATCHED personalized PageRank (r10 verdict ask #3): K=3 seeds
+def ppr_multiseed(
+    spark: SparkSession, sf_dir: str, k: int = _PPR_SEEDS
+) -> DataFrame:
+    """BATCHED personalized PageRank (3 iterations, d=0.85): K=3 seeds
     served by ONE value iteration -- real retrieval workloads restart
     at many query nodes per pass, and the whole point of the batch is
     that the per-round edge shuffle AMORTIZES: the rank relation is
@@ -445,14 +330,15 @@ def ppr_multiseed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Seeds are the top-K degree parts chosen in-plan (TakeOrdered
     limit-K -- a distributed top-k, no global sort -- then seed_id by
-    row_number over the already-3-row relation; deterministic because
-    the ordering is total: degree desc, id asc).  Everything else
-    mirrors ``ppr_parts_3iter``: broadcast seed join onto the node
-    base, base is the LEFT side of every rebuild so prev ranks are
-    referenced ONCE per round (linear lazy lineage), decimal-exact
-    contribution sums, teleport mass to each seed's own row, zero-mass
-    tail dropped at publish (each seed's output stays proportional to
-    ITS neighborhood).  Floats publish at 12 digits.
+    row_number over the already-K-row relation; deterministic because
+    the ordering is total: degree desc, id asc).  Broadcast seed join
+    onto the node base; base is the LEFT side of every rebuild so prev
+    ranks are referenced ONCE per round (linear lazy lineage, no
+    checkpoint and nothing cached), decimal-exact contribution sums,
+    teleport mass to each seed's own row, zero-mass tail dropped at
+    publish (each seed's output stays proportional to ITS
+    neighborhood).  Floats publish at 12 digits.  ``ppr_parts_3iter``
+    is this entry at K=1.
 
     Reference parity: no graph operators in the reference
     (DAG1:1-322); module docstring covers the family.
@@ -461,14 +347,13 @@ def ppr_multiseed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _copurchase_edges(spark, sf_dir, threshold=2)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # r14: outdeg folded onto the cached edge relation once (the
-    # pagerank_parts_3iter rationale) -- one join per round, not two
-    ewd = edges.join(deg, "src").cache()
+    # outdeg folded onto the edge relation once: one join per round, not two
+    ewd = edges.join(deg, "src")
     nodes = ewd.select(F.col("src").alias("node")).distinct()
     wseed = Window.orderBy(F.col("outdeg").desc(), F.col("src").asc())
     seeds = (
         deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
-        .limit(_PPR_SEEDS)
+        .limit(k)
         .select(
             F.col("src").alias("seed_node"),
             F.row_number().over(wseed).cast("bigint").alias("seed_id"),
@@ -483,7 +368,6 @@ def ppr_multiseed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0))
             .alias("is_seed"),
         )
-        .cache()
     )
     ranks = base.select(
         "seed_id", "node", F.col("is_seed").cast("double").alias("rank"), "is_seed"
@@ -521,6 +405,32 @@ def ppr_multiseed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").alias("part"),
         F.round("rank", 12).alias("rank"),
     )
+
+
+@register(
+    "ppr_parts_3iter", oracle=_ppr_oracle(1, "node AS part, round(rank, 12) AS rank")
+)
+def ppr_parts_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PERSONALIZED PageRank (3 iterations, d=0.85, restart at the
+    hub part): the graph-retrieval twin of ``pagerank_parts_3iter`` --
+    teleport mass returns to ONE seed instead of spreading uniformly,
+    so the stationary mass measures proximity TO THE SEED (the
+    'similar items via random walk' primitive behind co-purchase
+    recommendation and GraphSAGE-style neighborhood sampling).  It is
+    ``ppr_multiseed`` at K=1 (seed = argmax degree, min-id tie-break),
+    published as (part, rank); the zero-mass tail beyond 3 hops of the
+    seed is dropped.
+
+    The graph is the >=2-shared-orders co-purchase graph (denser than
+    global pagerank's threshold-3 one: probed, the threshold-3 graph
+    collapses to 4 nodes at sf0.1 and a seed neighborhood of 2 -- a
+    degenerate retrieval surface; at threshold 2 the seed's 3-hop
+    support is 12/255/200 nodes across the three SFs).
+
+    Reference parity: no graph operators in the reference
+    (DAG1:1-322); module docstring covers the family.
+    """
+    return ppr_multiseed(spark, sf_dir, k=1).select("part", "rank")
 
 
 _CC_MAX_ROUNDS = 50
@@ -1143,7 +1053,6 @@ def coreness_hindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_modularity_brands",
-    eager_build=True,
     oracle=f"""
     WITH {_pair_edges_sql(threshold=2)},
     lab AS (SELECT p_partkey AS node, p_brand AS brand FROM part),
@@ -1181,80 +1090,75 @@ def graph_modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the statistic non-degenerate (a connected-component partition has
     all edges intra by construction -- probed, Q collapses).
 
-    Plan shape: the staged edge list joins the (node, brand)
-    labeling twice -- left to AQE, which broadcasts the labeling when
-    it is small (it is, at fixture scale) and shuffles when it is not
-    (the labeling is O(parts), i.e. scales with SF, so a FORCED
-    broadcast hint would OOM the driver at 100 TB) -- then two
-    O(brands) aggregates and a broadcast scalar T.  The heavy relation
-    is the edge list, touched once.
+    Plan shape: one lazy query, nothing staged or checkpointed (a
+    stage planned in the same query as its readers is re-shuffled by
+    them anyway, so staging only added an exchange).  The edge list
+    joins the (node, brand) labeling twice -- left to AQE, which
+    broadcasts the labeling when it is small (it is, at fixture scale)
+    and shuffles when it is not (the labeling is O(parts), i.e. scales
+    with SF, so a FORCED broadcast hint would OOM the driver at
+    100 TB) -- then two O(brands) aggregates and a broadcast scalar T.
 
     Reference parity: no graph operators in the reference (DAG1:1-322,
     linear pandas flows); see the module docstring.
     """
-    # src-staged edges shared by both edge consumers (deg's groupBy(src)
-    # and intra's src-label join).  The O(brands) result is checkpointed
-    # inside the scope, so nothing returned reads the cache.
-    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
-        lab = t(spark, sf_dir, "part").select(
-            F.col("p_partkey").alias("node"), F.col("p_brand").alias("brand")
-        )
-        la = lab.select(F.col("node").alias("src"), F.col("brand").alias("brand_a"))
-        lb = lab.select(F.col("node").alias("dst"), F.col("brand").alias("brand_b"))
-        # r14 (guide §2.3/§2.4): the labeling covers every node (edge
-        # endpoints are part keys), so degree_sum per brand folds from the
-        # O(nodes) degree relation against the labeling, and t_dir folds
-        # from deg -- the old plan fed the full two-label-join edge
-        # relation to a SECOND aggregate consumer (degs) and ran a third
-        # edge scan for t_dir; both now cost O(nodes).  intra keeps the
-        # two-label-join shape -- it genuinely needs both endpoint brands
-        # per edge, and an aggregate-first rewrite (per-(src, brand) counts
-        # then attach brand_a) measured a consistent ~0.2 s SLOWER at sf0.1
-        # (the added exchange outweighs the saved broadcast-side join
-        # locally) -- examined and rejected.
-        # No broadcast hint anywhere (unchanged rationale): (node, brand)
-        # is O(parts) and scales with SF, so a forced broadcast OOMs the
-        # driver at 100 TB -- AQE broadcasts at runtime when the labeling
-        # is actually small.  Verified row-identical vs the old plan.
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-        tdir = deg.agg(
-            F.coalesce(F.sum("d"), F.lit(0)).cast("bigint").alias("t_dir")
-        )
-        degs = (
-            deg.join(la, "src")
-            .groupBy(F.col("brand_a").alias("brand"))
-            .agg(F.sum("d").cast("bigint").alias("degree_sum"))
-        )
-        intra = (
-            edges.join(la, "src")
-            .join(lb, "dst")
-            .filter(F.col("brand_a") == F.col("brand_b"))
-            .groupBy(F.col("brand_a").alias("brand"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("intra_deg"))
-        )
-        return (
-            degs.join(intra, "brand", "left_outer")
-            .crossJoin(F.broadcast(tdir))
-            .select(
-                "brand",
-                F.coalesce("intra_deg", F.lit(0)).cast("bigint").alias("intra_deg"),
-                "degree_sum",
-                # products route through decimal(38,0) (house overflow
-                # discipline: bigint*bigint wraps silently in non-ANSI Spark
-                # while the oracle errors loudly); the published value must
-                # still fit bigint, i.e. intra*T < 2^63 -- documented bound
-                (
-                    F.coalesce("intra_deg", F.lit(0)).cast("decimal(38,0)")
-                    * F.col("t_dir")
-                    - F.col("degree_sum").cast("decimal(38,0)")
-                    * F.col("degree_sum")
-                )
-                .cast("bigint")
-                .alias("contrib_num"),
-                "t_dir",
+    edges = _copurchase_edges(spark, sf_dir, threshold=2)
+    lab = t(spark, sf_dir, "part").select(
+        F.col("p_partkey").alias("node"), F.col("p_brand").alias("brand")
+    )
+    la = lab.select(F.col("node").alias("src"), F.col("brand").alias("brand_a"))
+    lb = lab.select(F.col("node").alias("dst"), F.col("brand").alias("brand_b"))
+    # r14 (guide §2.3/§2.4): the labeling covers every node (edge
+    # endpoints are part keys), so degree_sum per brand folds from the
+    # O(nodes) degree relation against the labeling, and t_dir folds
+    # from deg -- the old plan fed the full two-label-join edge
+    # relation to a SECOND aggregate consumer (degs) and ran a third
+    # edge scan for t_dir; both now cost O(nodes).  intra keeps the
+    # two-label-join shape -- it genuinely needs both endpoint brands
+    # per edge, and an aggregate-first rewrite (per-(src, brand) counts
+    # then attach brand_a) measured a consistent ~0.2 s SLOWER at sf0.1
+    # (the added exchange outweighs the saved broadcast-side join
+    # locally) -- examined and rejected.
+    # No broadcast hint anywhere (unchanged rationale): (node, brand)
+    # is O(parts) and scales with SF, so a forced broadcast OOMs the
+    # driver at 100 TB -- AQE broadcasts at runtime when the labeling
+    # is actually small.  Verified row-identical vs the old plan.
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    tdir = deg.agg(F.coalesce(F.sum("d"), F.lit(0)).cast("bigint").alias("t_dir"))
+    degs = (
+        deg.join(la, "src")
+        .groupBy(F.col("brand_a").alias("brand"))
+        .agg(F.sum("d").cast("bigint").alias("degree_sum"))
+    )
+    intra = (
+        edges.join(la, "src")
+        .join(lb, "dst")
+        .filter(F.col("brand_a") == F.col("brand_b"))
+        .groupBy(F.col("brand_a").alias("brand"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("intra_deg"))
+    )
+    return (
+        degs.join(intra, "brand", "left_outer")
+        .crossJoin(F.broadcast(tdir))
+        .select(
+            "brand",
+            F.coalesce("intra_deg", F.lit(0)).cast("bigint").alias("intra_deg"),
+            "degree_sum",
+            # products route through decimal(38,0) (house overflow
+            # discipline: bigint*bigint wraps silently in non-ANSI Spark
+            # while the oracle errors loudly); the published value must
+            # still fit bigint, i.e. intra*T < 2^63 -- documented bound
+            (
+                F.coalesce("intra_deg", F.lit(0)).cast("decimal(38,0)")
+                * F.col("t_dir")
+                - F.col("degree_sum").cast("decimal(38,0)")
+                * F.col("degree_sum")
             )
-            .localCheckpoint()
+            .cast("bigint")
+            .alias("contrib_num"),
+            "t_dir",
         )
+    )
 
 
 _NJ_VIA_DEGREE_CAP = 64
@@ -1414,8 +1318,8 @@ def hits_bipartite_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Distributed shape per half-round: one equi-join of the edge list
     against the O(nodes) score relation + one hash aggregate -- the
-    same amortized message-passing shuffle as ppr_multiseed, and the
-    edge relation is reused across all four half-rounds (cached once).
+    same amortized message-passing shuffle as ppr_multiseed; the four
+    half-rounds each read the edge relation (nothing cached).
     No windows, no driver state beyond plan construction; lazy 2-round
     unroll with linear lineage (each score relation referenced once).
 
@@ -1428,7 +1332,6 @@ def hits_bipartite_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
-        .cache()
     )
     dec = "decimal(38,0)"
     a = e.groupBy("p").agg(F.count(F.lit(1)).cast(dec).alias("a"))

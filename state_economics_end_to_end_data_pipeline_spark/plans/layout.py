@@ -254,17 +254,13 @@ def hilbert_layout_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d").alias("hv"),
         F.expr(_interleave_sql()).alias("zv"),
     )
-    # bounded unpartitioned windows: hz has <= 65,536 rows by construction.
-    # cache(): both layout rollups consume cum -- without it each recomputes
-    # the scan + fine aggregate + both windows (measured: 2 scan branches
-    # pre-AQE); the cached relation is dimension-sized (lazy cache, so
-    # building the plan stays side-effect-free)
+    # bounded unpartitioned windows: hz has <= 65,536 rows by construction
     cum = hz.select(
         "px", "py", "n",
         (F.sum("n").over(Window.orderBy("hv")) - F.col("n")).alias("hstart"),
         (F.sum("n").over(Window.orderBy("zv")) - F.col("n")).alias("zstart"),
         F.sum("n").over(Window.partitionBy()).alias("total"),
-    ).cache()
+    )
 
     def rollup(start_col: str, label: str) -> DataFrame:
         bucket = F.floor(F.col(start_col) * 256.0 / F.col("total")).cast("bigint")

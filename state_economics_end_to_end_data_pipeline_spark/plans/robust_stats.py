@@ -378,20 +378,9 @@ def mad_per_group_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-level check against exact MAD lives in
     tests/test_robust_stats.py.
 
-    The O(groups) sketch frame feeds TWO consumers (the abs_dev rank
-    re-scan's broadcast and the final output join); Spark has no
-    subplan/exchange reuse across separate DataFrame references, so
-    without materialization the whole two-sketch pipeline (2 fact scans
-    + 2 GK sketches) would execute twice. It is persist()ed instead:
-    plan CONSTRUCTION stays lazy (a catalog consumer that only wants the
-    schema or explain output runs zero jobs -- an earlier version
-    collect()ed here and made building this entry a 2-job action), and
-    on first action both references resolve to the same InMemoryRelation,
-    so the sketch pipeline executes once. The cached relation is
-    O(groups) rows (bytes, not fact-sized); it stays in the session
-    cache for the frame's lifetime, which is the deliberate trade
-    against build-time execution."""
-    frame = _approx_mad_frame(spark, sf_dir).persist()
+    The O(groups) sketch frame feeds two consumers (the abs_dev rank
+    re-scan's broadcast and the final output join) of one lazy query."""
+    frame = _approx_mad_frame(spark, sf_dir)
     li = t(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
     dev = li.join(
         F.broadcast(frame.select("l_returnflag", "approx_median", "approx_mad")),

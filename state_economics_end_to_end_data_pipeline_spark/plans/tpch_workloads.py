@@ -864,25 +864,22 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q6 submitted as a literal SQL STRING through spark.sql() over a
-    registered temp view -- the SQL-surface twin of
-    tpch_q6_forecast_revenue (DataFrame API). Same Catalyst plan, same
-    pushdown, same decimal-exact sum; the pair is the evidence that the
-    engine's two query surfaces are the same engine. The view name is
-    per-sf-dir so concurrent sf runs don't collide."""
-    import hashlib
-
-    view = f"lineitem_q6_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    t(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
+    """Q6 submitted as a literal SQL STRING through spark.sql() -- the
+    SQL-surface twin of tpch_q6_forecast_revenue (DataFrame API). Same
+    Catalyst plan, same pushdown, same decimal-exact sum; the pair is
+    the evidence that the engine's two query surfaces are the same
+    engine. The table is bound as a query argument, so no view outlives
+    the call."""
     return spark.sql(
-        f"""
+        """
         SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(38,6)))
                     AS DOUBLE) AS revenue
-        FROM {view}
+        FROM {lineitem}
         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
           AND l_shipdate <  TIMESTAMP '1997-01-01'
           AND l_discount >= CAST(0.05 AS DOUBLE)
           AND l_discount <= CAST(0.07 AS DOUBLE)
           AND l_quantity < 24
-        """
+        """,
+        lineitem=t(spark, sf_dir, "lineitem"),
     )

@@ -37,6 +37,9 @@ from state_economics_end_to_end_data_pipeline_spark.streaming import (
 def test_streaming_tumbling_equals_batch(spark, sf_dir):
     stream = read_events_stream(spark, sf_dir)
     streamed = run_available_now(tumbling_counts(stream), output_mode="complete")
+    # the memory sink's view is dropped on return; the frame keeps the rows
+    views = [r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary]
+    assert not [v for v in views if v.startswith("stream_")], views
     got = {
         (r["window"]["start"], r["event_type"]): (r["n_events"], r["total_value"])
         for r in streamed.collect()

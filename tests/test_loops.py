@@ -7,15 +7,14 @@
   checkpoints).
 - A staged relation's round join reads the cache with no Exchange and no
   Sort on the staged side.
+- Every catalog entry leaves the session as it found it: no cache entry,
+  no changed setting, no temp view beyond the reader's scan views.
 - ``LAST_ROUNDS`` at sf0.001 is pinned per entry.
 """
 
 from __future__ import annotations
 
-import importlib.util
-import sys
 from contextlib import contextmanager
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,8 +22,6 @@ from pyspark.sql import functions as F
 from state_economics_end_to_end_data_pipeline_spark.operators import dedup, loops
 from state_economics_end_to_end_data_pipeline_spark.plans import graph_analytics as ga
 from state_economics_end_to_end_data_pipeline_spark.plans import load_all
-
-ROOT = Path(__file__).resolve().parent.parent
 
 
 def _cache_empty(spark) -> bool:
@@ -251,36 +248,52 @@ def test_staged_plan_check_detects_an_unstaged_edge_side(spark):
     assert _cache_empty(spark)
 
 
-# ------------------------------------------- normal runs: leaks and rounds
+# ------------------------------- normal runs: session hygiene and rounds
 
 
-def _catalog_loop_entries() -> tuple[str, ...]:
-    spec = importlib.util.spec_from_file_location(
-        "perfbench_run", ROOT / "perfbench" / "run.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules[spec.name] = mod  # its dataclasses resolve their module
-    spec.loader.exec_module(mod)
-    return mod.CATALOG_ENTRIES
+def _settings(spark) -> dict[str, str]:
+    # explicitly set keys only: SET -v also lists confs registered on
+    # first use, which grows as entries touch new features
+    return dict(spark.sql("SET").collect())
+
+
+def _temp_views(spark) -> set[str]:
+    return {
+        r.tableName
+        for r in spark.sql("SHOW TABLES").collect()
+        if r.isTemporary and not r.tableName.startswith("__sg_scan_")
+    }
 
 
 @pytest.fixture(scope="module")
 def loop_runs(spark, sf_dir):
-    """Each benchmark loop entry plus kcore_parts built and drained once in
-    one session with no clearCache() in between: (cache empty, rounds)."""
+    """Every catalog entry built and drained once in one session with no
+    clearCache() in between.  Per entry: what it left behind (a cache
+    entry, changed settings, added temp views -- the reader's scan views
+    aside) and its LAST_ROUNDS."""
     spark.catalog.clearCache()
     out = {}
-    for name in (*_catalog_loop_entries(), "kcore_parts"):
+    for name, q in sorted(load_all().items()):
+        conf, views = _settings(spark), _temp_views(spark)
         ga.LAST_ROUNDS.clear()
-        load_all()[name].fn(spark, sf_dir).collect()
-        out[name] = (_cache_empty(spark), dict(ga.LAST_ROUNDS))
+        q.fn(spark, sf_dir).collect()
+        left = []
+        if not _cache_empty(spark):
+            left.append("cache")
+            spark.catalog.clearCache()  # judge the next entry on its own
+        after = _settings(spark)
+        left += [f"conf {k}" for k in sorted(conf.keys() | after.keys())
+                 if conf.get(k) != after.get(k)]
+        left += [f"view {v}" for v in sorted(_temp_views(spark) - views)]
+        out[name] = (left, dict(ga.LAST_ROUNDS))
     return out
 
 
-def test_catalog_loop_entries_leave_no_cache(loop_runs):
-    assert len(loop_runs) == 11
-    leaked = [name for name, (empty, _) in loop_runs.items() if not empty]
-    assert not leaked
+def test_catalog_entries_leave_the_session_as_found(loop_runs):
+    assert len(loop_runs) == len(load_all())
+    left = [f"{name}: {', '.join(what)}" for name, (what, _) in loop_runs.items() if what]
+    if left:  # pytest.fail: an assert message would be truncated
+        pytest.fail(f"{len(left)} entries changed the session:\n" + "\n".join(left))
 
 
 # changing rounds at sf0.001; scc_event_types counts changing rounds like

@@ -1,5 +1,7 @@
 """``session.get_spark`` from a driver whose working directory is not the
-repository root: the Python workers must still import the package."""
+repository root: the Python workers must still import the package.  The
+same driver checks that a first scan read after an ``Observation`` logs
+no listener error."""
 
 from __future__ import annotations
 
@@ -12,6 +14,8 @@ from .conftest import REPO_ROOT, SF_SMOKE
 SCRIPT = """
 import sys
 sys.path.insert(0, sys.argv[1])
+from pyspark.sql import Observation, functions as F
+from state_economics_end_to_end_data_pipeline_spark.io.readers import read_parquet_table
 from state_economics_end_to_end_data_pipeline_spark.plans import load_all
 from state_economics_end_to_end_data_pipeline_spark.session import get_spark
 
@@ -19,13 +23,19 @@ spark = get_spark(app_name="worker-path", shuffle_partitions=2)
 qs = load_all()
 for name in ("pyds_synthetic_events", "multimodal_pixels"):
     print(name, len(qs[name].fn(spark, sys.argv[2]).collect()))
+obs = Observation()
+spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+print("fresh_scan", read_parquet_table(spark, sys.argv[2], "region").count())
+spark.stop()  # drains the listener bus before the process exits
 """
 
 
 def test_workers_import_the_package_from_another_directory(tmp_path):
     """The repo is only on the driver's ``sys.path`` (not on ``PYTHONPATH``,
     not the working directory); a Python data source and a pandas UDF entry
-    must still run."""
+    must still run.  After an ``Observation``, the first read of a scan
+    path must not log ``Listener ... threw an exception`` (a failed
+    analysis of the missing scan view used to)."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
         [sys.executable, "-c", SCRIPT, str(REPO_ROOT), SF_SMOKE],
@@ -33,6 +43,7 @@ def test_workers_import_the_package_from_another_directory(tmp_path):
     )
     assert "ModuleNotFoundError" not in out.stderr, out.stderr[-3000:]
     assert out.returncode == 0, out.stderr[-3000:]
+    assert "threw an exception" not in out.stderr, out.stderr[-3000:]
     rows = dict(line.split() for line in out.stdout.splitlines())
-    assert set(rows) == {"pyds_synthetic_events", "multimodal_pixels"}
+    assert set(rows) == {"pyds_synthetic_events", "multimodal_pixels", "fresh_scan"}
     assert all(int(n) > 0 for n in rows.values()), rows

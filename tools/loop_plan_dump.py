@@ -51,7 +51,6 @@ def main() -> int:
     out_dir.mkdir(parents=True, exist_ok=True)
 
     for name in args.names:
-        spark.catalog.clearCache()
         seen: set[str] = set()
 
         def hook(tag: str, df, _name=name, _seen=seen) -> None:

@@ -1,7 +1,7 @@
 """Time catalog entries in isolation with the bench's method (build the
-DataFrame, drain it with ``collect()``, min-of-N, ``clearCache()`` between
-entries) and print one JSON line per entry: best and first seconds, rows,
-and the first run's jobs, stages, shuffle bytes (read + write) and spill.
+DataFrame, drain it with ``collect()``, min-of-N) and print one JSON line
+per entry: best and first seconds, rows, and the first run's jobs,
+stages, shuffle bytes (read + write) and spill.
 
 Why not bench.py: a full 287-entry pass carries suite-position noise (JIT
 warmth, GC debt); optimizing one operator needs a tight loop over the
@@ -59,7 +59,6 @@ def main() -> int:
 
     master = label(spark)
     for name in names:
-        spark.catalog.clearCache()
         t = timed(lambda: qs[name].fn(spark, args.sf_dir), args.n)
         print(json.dumps({"entry": name, "master": master, **{
             k: round(v, 3) if isinstance(v, float) else v

@@ -286,11 +286,6 @@ def main() -> int:
         names = args.names or sorted(qs)
     n_fail = 0
     for name in names:
-        # A few lazily-returned plans cache intermediates they cannot
-        # unpersist themselves (the harness, not the entry, runs the
-        # action); clear between entries so cached partitions don't
-        # accumulate across a 275-entry sweep (r11 advice #3).
-        spark.catalog.clearCache()
         t0 = time.time()
         try:
             sdf = qs[name](spark, args.sf_dir).toPandas()
