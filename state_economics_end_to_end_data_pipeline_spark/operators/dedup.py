@@ -196,19 +196,6 @@ def jaccard_pairs(
     return out
 
 
-def simhash16_from_h4(h4s: Column) -> Column:
-    """Tier 4 -- 16-bit SimHash from a pre-computed array of 4-hex-char
-    token hashes (``substring(md5(token), 1, 4)``).
-
-    Each token votes +-1 on 16 bits; bit j of the final hash is the sign
-    of the vote sum. Hex digits are decoded with a position-lookup
-    (portable to any SQL dialect -- no hex-int casts). Takes the hash
-    array (not raw text) so md5 runs ONCE per token, not once per bit --
-    the 16 vote expressions all reference the same attribute."""
-
-    return simhash_from_hexes(h4s, n_bits=16)
-
-
 def _hex_bit_contrib(nibble_idx: int, bit_in_nibble: int):
     """Unary closure: +-1 vote of one hash bit, decoded from the hex
     prefix with a position-lookup (portable -- no hex-int casts)."""

@@ -4,12 +4,13 @@ The graph loops in ``plans/graph_analytics.py`` and the dedup clustering in
 ``operators/dedup.py`` all repeat the same parts, which live here:
 
 - ``staged(df, key)`` stages a loop-invariant relation for the scope of a
-  ``with``: ``repartition(key).sortWithinPartitions(key).cache()``.
-  Once filled, ``InMemoryTableScanExec`` keeps both the hash partitioning
-  and the ordering, so a round's join or aggregate on ``key`` plans no
-  Exchange and no Sort on the staged side (``plans/r15/*_nobroadcast.txt``,
-  ``tests/test_loops.py``).  The cache is released when the scope exits,
-  also on error.
+  ``with``: ``repartition(key).sortWithinPartitions(key).cache()``, the
+  package's only cache.  Once filled, ``InMemoryTableScanExec`` keeps both
+  the hash partitioning and the ordering, so a round's join or aggregate
+  on ``key`` plans no Exchange and no Sort on the staged side
+  (``plans/r15/*_nobroadcast.txt``, ``tests/test_loops.py``).  The cache
+  is released when the scope exits, also on error.  Per-round state is
+  never staged: it goes through ``materialize``.
 - ``materialize(tag, df, metric)`` ends one round: the body is offered to
   ``HOOK``, then cut from its lineage with ``localCheckpoint`` (a lazy
   unroll duplicates the round subtree exponentially -- measured on
@@ -42,10 +43,14 @@ def staged(df: DataFrame, key: str) -> Iterator[DataFrame]:
     scope is open.  Results that outlive the scope must not read it: return
     checkpointed frames, or checkpoint the result inside the scope.
 
-    Plans see the partitioning only once the cache is filled (under AQE a
-    cached plan reports it when final): a plan built before the first
-    action over the stage still re-shuffles it.  The loops' start
-    checkpoints fill their edge stages before any round is planned."""
+    For loop-invariant relations only, opened before the loop and filled
+    before any round is planned; per-round state goes through
+    ``materialize``.  Plans see the partitioning only once the cache is
+    filled (under AQE a cached plan reports it when final): a plan built
+    before the first action over the stage still re-shuffles it, so a
+    stage opened inside a round is mostly a shuffle, a sort and a cache
+    that the round's own plans cannot use.  The loops' start checkpoints
+    fill their edge stages before any round is planned."""
     out = df.repartition(key).sortWithinPartitions(key).cache()
     try:
         yield out

@@ -5447,7 +5447,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 64 integer t_d sums + S + (first round only) the 64 m_d sums
     are a single map-side-combined global aggregate producing ONE row.
     No shuffle of the data at all, at any scale: a 1e9 x 64 matrix
-    costs 3 cached scans and three O(dim) driver reductions.  The
+    costs 3 checkpointed scans and three O(dim) driver reductions.  The
     vector itself is O(dim) driver state, the same bounded-collect
     contract as the kmeans centroids (operators/similarity.py).
 
@@ -5529,25 +5529,16 @@ def _pca_power_vector(
     count.  Memoized per (session, sf_dir); see ``_PCA_MEMO``."""
     slot = _pca_memo_slot(spark, sf_dir)
     if "v1" not in slot:
-        # cache across the _PCA_ROUNDS actions (iterative-loop
-        # discipline: each round's collect would otherwise rescan the
-        # parquet)
-        emb = t(spark, sf_dir, "embeddings").select("embedding").cache()
         state: dict = {}
-        try:
-            v = _pca_power_rounds(emb, state)
-        finally:
-            # a failed mid-round action must not leave cached blocks
-            # pinned for the rest of a long bench/sweep session
-            emb.unpersist()
+        v = _pca_power_rounds(spark, sf_dir, state)
         slot.update(v1=v, m=state["m"], n=state["n"])
     return slot["v1"], slot["m"], slot["n"]
 
 
 def _pca_power_rounds(
-    emb: DataFrame, state: dict, deflate: list[float] | None = None
+    spark: SparkSession, sf_dir: str, state: dict, deflate: list[float] | None = None
 ) -> list[float]:
-    """_PCA_ROUNDS exact power rounds on the (cached) embedding frame:
+    """_PCA_ROUNDS exact power rounds on the embedding column:
     v <- normalize(C v), with C the centered covariance applied via the
     scaled-integer matvec of ``embedding_pca_power``.  ``state`` carries
     the exact column sums m_d and the row count n across calls (filled
@@ -5558,9 +5549,16 @@ def _pca_power_rounds(
     per-round Gram-Schmidt deflation, the textbook second-eigenvector
     power scheme.  The deflation arithmetic is O(dim) driver floats in
     LEFT-FOLD order, mirrored expression-for-expression by the oracle's
-    list_reduce CTEs so the published vector stays bit-equal."""
+    list_reduce CTEs so the published vector stays bit-equal.
+
+    The rounds read one lazy ``localCheckpoint`` of the scan: the first
+    round's job fills it, the later rounds read its blocks instead of
+    the parquet, and the blocks are freed with the frame (nothing enters
+    the session's cache)."""
     import math
 
+    emb = t(spark, sf_dir, "embeddings").select("embedding")
+    emb = emb.localCheckpoint(eager=False)
     dec = "decimal(38,0)"
 
     def xm(d: int):
@@ -5718,7 +5716,7 @@ def embedding_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Mu & Viswanath 2018) removes the top k ~ dim/100 components; this
     publishes the subspace that postprocessing consumes.
 
-    Distributed shape: SIX cached corpus scans total (3 per component
+    Distributed shape: SIX checkpointed corpus scans total (3 per component
     -- the column sums m_d and n ride the first scan and are CARRIED
     ACROSS components via the shared state dict, so component 2 adds no
     extra aggregates), each one whole-stage-codegen pass producing ONE
@@ -5752,13 +5750,7 @@ def embedding_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1, m_ints, n = _pca_power_vector(spark, sf_dir)
     slot = _pca_memo_slot(spark, sf_dir)
     if "v2" not in slot:
-        emb = t(spark, sf_dir, "embeddings").select("embedding").cache()
-        try:
-            slot["v2"] = _pca_power_rounds(
-                emb, {"n": n, "m": m_ints}, deflate=v1
-            )
-        finally:
-            emb.unpersist()
+        slot["v2"] = _pca_power_rounds(spark, sf_dir, {"n": n, "m": m_ints}, deflate=v1)
     v2 = slot["v2"]
     rows = [(1, d, v1[d]) for d in range(_PCA_DIM)] + [
         (2, d, v2[d]) for d in range(_PCA_DIM)

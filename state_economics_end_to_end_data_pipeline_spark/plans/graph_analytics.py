@@ -12,8 +12,6 @@ doubles (float addition order is partition-dependent otherwise).
 
 from __future__ import annotations
 
-from contextlib import ExitStack
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -146,58 +144,67 @@ _BFS_MAX_HOPS = 4
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hop-limited BFS from the highest-degree node of the co-purchase
     graph (>=2 shared orders); returns node counts per shortest-hop
-    distance 0..4.
-
-    The distributed shape for single/multi-source shortest paths on a
-    DataFrame engine: the frontier is expanded one hop per round via an
-    equi-join against the edge list, and a left-anti join against the
-    visited set keeps each round's work proportional to the NEW
-    frontier, not the whole reachable set -- at 100x the data, total work
-    is O(edges touched), same as sequential BFS. The root is chosen
-    in-plan (argmax degree, min-id tie-break) -- no driver collect. The
+    distance 0..4.  It is ``_multi_source_bfs`` at K=1 (root = argmax
+    degree, min-id tie-break, chosen in-plan -- no driver collect).  The
     oracle states the same fixpoint as a hop-bounded recursive CTE over
     identical edges.
 
-    NOTE -- building this plan EXECUTES the traversal (like
-    mad_per_group_approx's sketch collect): each round is materialized
-    via ``localCheckpoint`` exactly as `cluster_labels`
-    (operators/dedup.py:280) does. This is a measured necessity, not
-    convenience: a fully lazy 4-hop unroll references every round's
-    frame twice (anti-join + union), and the resulting subtree
-    duplication is exponential in depth -- AQE's ReusedExchange does NOT
-    collapse the distinct/anti-join exchanges across unroll depths
-    (measured at sf0.01: lazy 14.5s, edges-only checkpoint 18.9s,
-    per-round checkpoint ~2s). Iterative traversals on DataFrame
-    engines need per-round materialization; plan-only consumers should
-    skip this entry (it is the catalog's one traversal-at-build entry
-    alongside mad_per_group_approx's documented build-time action).
-    """
+    Building this plan EXECUTES the traversal (one checkpoint per round,
+    see ``_multi_source_bfs``); plan-only consumers skip it."""
+    visited = _multi_source_bfs(spark, sf_dir, 1, _BFS_MAX_HOPS, "graph_bfs_hops_round")
+    return visited.groupBy(F.col("hop").cast("bigint").alias("hops")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_nodes")
+    )
+
+
+def _multi_source_bfs(
+    spark: SparkSession, sf_dir: str, k: int, hops: int, tag: str
+) -> DataFrame:
+    """``(seed, node, hop)``: every node within ``hops`` of one of the
+    ``k`` highest-degree nodes of the co-purchase graph (>=2 shared
+    orders; min-id tie-break, chosen in-plan), at its shortest hop from
+    that seed.
+
+    The distributed shape for multi-source shortest paths on a DataFrame
+    engine: the frontier, keyed (seed, node), is expanded one hop per
+    round via ONE equi-join against the edge list shared by every seed,
+    and a left-anti join against the visited set keeps each round's work
+    proportional to the NEW frontier -- at 100x the data, total work is
+    O(edges touched), the same shuffles as one BFS on the union frontier.
+
+    Each round is materialized via ``materialize(tag, ...)``.  This is a
+    measured necessity, not convenience: a fully lazy 4-hop unroll
+    references every round's frame twice (anti-join + union), and the
+    resulting subtree duplication is exponential in depth -- AQE's
+    ReusedExchange does NOT collapse the distinct/anti-join exchanges
+    across unroll depths (measured at sf0.01: lazy 14.5s, edges-only
+    checkpoint 18.9s, per-round checkpoint ~2s)."""
     # src-staged: the src-keyed per-round join reads the cache exchange-free
     with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        root = (
+        seeds = (
             deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
-            .limit(1)
-            .select(F.col("src").alias("node"))
+            .limit(k)
+            .select(F.col("src").alias("seed"))
         )
-        visited = root.select("node", F.lit(0).alias("hops")).localCheckpoint()
-        frontier = visited.select("node")
-        for h in range(1, _BFS_MAX_HOPS + 1):
+        visited = seeds.select(
+            "seed", F.col("seed").alias("node"), F.lit(0).alias("hop")
+        ).localCheckpoint()
+        frontier = visited.select("seed", "node")
+        for h in range(1, hops + 1):
             step = (
                 frontier.join(edges, frontier.node == edges.src)
-                .select(F.col("dst").alias("node"))
+                .select("seed", F.col("dst").alias("node"))
                 .distinct()
-                .join(visited, "node", "left_anti")
-                .select("node", F.lit(h).alias("hops"))
             )
-            nxt = materialize("graph_bfs_hops_round", step)
+            if h > 1:  # the edges have no self-loops: hop 1 never revisits
+                step = step.join(visited, ["seed", "node"], "left_anti")
+            nxt = materialize(tag, step.select("seed", "node", F.lit(h).alias("hop")))
             # the visited set is a LAZY union of checkpoints: referencing it
             # per round is a linear union scan, never a subtree recompute
             visited = visited.unionByName(nxt)
-            frontier = nxt.select("node")
-    return visited.groupBy(F.col("hops").cast("bigint").alias("hops")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_nodes")
-    )
+            frontier = nxt.select("seed", "node")
+    return visited
 
 
 @register(
@@ -1835,53 +1842,24 @@ def harmonic_centrality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled harmonic centrality (Boldi & Vigna 2014's robust
     replacement for closeness -- sums 1/d so disconnection contributes 0
     instead of poisoning the mean) on the co-purchase graph: a
-    MULTI-SOURCE hop-limited BFS from the K=3 highest-degree seeds, then
-    per node harmonic(v) = sum over reached seeds of 1/d(seed, v). The
-    standard centrality estimator at graph scale: exact all-pairs is
-    O(V*E), a K-seed sample is K BFS sweeps that here share EVERY
-    per-round join by carrying seed through the frontier relation
-    (frontier keyed (seed, node)), exactly the amortization
-    ``ppr_multiseed`` proves for PPR -- one edges-join per ROUND, not per
-    seed-round.
-
-    The per-round anti-join against the visited set keeps each seed's
-    work proportional to its NEW frontier, so the batch costs the same
-    shuffles as ONE BFS on the union frontier. Seeds chosen in-plan
-    (top-K degree, min-id tie-break; deterministic). Per-round
-    ``localCheckpoint`` is the measured necessity documented on
-    ``graph_bfs_hops`` (lazy unrolls duplicate anti-join subtrees
-    exponentially). The 1/hop sum is decimal-routed so up-to-K-term
-    float addition is order-insensitive and engine-exact.
+    MULTI-SOURCE hop-limited BFS from the K=3 highest-degree seeds
+    (``_multi_source_bfs``), then per node harmonic(v) = sum over reached
+    seeds of 1/d(seed, v). The standard centrality estimator at graph
+    scale: exact all-pairs is O(V*E), a K-seed sample is K BFS sweeps
+    that here share EVERY per-round join by carrying seed through the
+    frontier relation, exactly the amortization ``ppr_multiseed`` proves
+    for PPR -- one edges-join per ROUND, not per seed-round. The 1/hop
+    sum is decimal-routed so up-to-K-term float addition is
+    order-insensitive and engine-exact.
 
     Reference parity: no reference counterpart (no graph analytics at
     all; SURVEY.md section 2) -- centrality sampling is 100 TB
     graph-curation machinery (influencer/hub scoring for sampling
     weights).
     """
-    # src-staged: the src-keyed per-round join reads the cache exchange-free
-    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        seeds = (
-            deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
-            .limit(_HC_SEEDS)
-            .select(F.col("src").alias("seed"))
-        )
-        visited = seeds.select(
-            "seed", F.col("seed").alias("node"), F.lit(0).alias("hop")
-        ).localCheckpoint()
-        frontier = visited.select("seed", "node")
-        for h in range(1, _HC_HOPS + 1):
-            step = (
-                frontier.join(edges, frontier.node == edges.src)
-                .select("seed", F.col("dst").alias("node"))
-                .distinct()
-                .join(visited, ["seed", "node"], "left_anti")
-                .select("seed", "node", F.lit(h).alias("hop"))
-            )
-            nxt = materialize("harmonic_centrality_round", step)
-            # lazy visited union of checkpoints (the graph_bfs_hops rationale)
-            visited = visited.unionByName(nxt)
-            frontier = nxt.select("seed", "node")
+    visited = _multi_source_bfs(
+        spark, sf_dir, _HC_SEEDS, _HC_HOPS, "harmonic_centrality_round"
+    )
     return (
         visited.filter(F.col("hop") > 0)
         .groupBy("node")
@@ -2120,10 +2098,10 @@ def densest_subgraph_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     RuntimeError if the cap is ever hit (impossible below ~1.5^48
     nodes, but never publish a partial peel silently).
     """
-    # src-staged: round 0's degree aggregate and src semi-join read the
-    # cache exchange-free; the result references only checkpoints
-    with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
-        return greedy_densest_subgraph(edges, rounds_key="densest_subgraph_peel")
+    return greedy_densest_subgraph(
+        _copurchase_edges(spark, sf_dir, threshold=2),
+        rounds_key="densest_subgraph_peel",
+    )
 
 
 def greedy_densest_subgraph(
@@ -2136,48 +2114,38 @@ def greedy_densest_subgraph(
 
     Round body: survivors derive from the round's OWN degree aggregate
     -- a node with zero surviving edges has deg 0 and fails the
-    cross-multiplied test anyway, so no s-side join is needed.  n rides
-    the survivor checkpoint's job; dd is the count that fills the
-    round's survivor-edge stage.  Each round restages its surviving
-    edges by ``src``, so the next round's degree aggregate and src
-    semi-join are exchange-free; a round's stage is released once the
-    next one is filled, the last one when the peel returns."""
+    cross-multiplied test anyway, so no s-side join is needed.  The
+    surviving node set and edge set are each one checkpoint, with n and
+    dd riding their own checkpoint's job; the input edges go through the
+    same edge checkpoint first."""
     count = F.count(F.lit(1))
     best = None  # (density, node_set, n, dd)
-    with ExitStack() as held:  # the newest round's survivor-edge stage
 
-        def step(state, n):
-            nonlocal best
-            s, e, dd = state
-            if n == 0:  # peeled empty: nothing left to change
-                return state, n
-            dens = dd / (2 * n)
-            if best is None or dens > best[0]:
-                best = (dens, s, n, dd)
-            deg = e.groupBy(F.col("src").alias("node")).agg(count.alias("deg"))
-            s, n = materialize(
-                "densest_subgraph_round",
-                deg.filter(2 * F.lit(n) * F.col("deg") > 3 * F.lit(dd)).select("node"),
-                count,
-            )
-            survivors = e.join(
-                s.select(F.col("node").alias("src")), "src", "leftsemi"
-            ).join(s.select(F.col("node").alias("dst")), "dst", "leftsemi")
-            with ExitStack() as fresh:
-                e = fresh.enter_context(staged(survivors, "src"))
-                dd = e.count()
-                held.close()  # the previous stage is no longer read
-                held.enter_context(fresh.pop_all())
-            return (s, e, dd), n
-
-        s0, n0 = materialize(
-            "densest_subgraph_start",
-            edges.select(F.col("src").alias("node")).distinct(),
+    def step(state, n):
+        nonlocal best
+        s, e, dd = state
+        if n == 0:  # peeled empty: nothing left to change
+            return state, n
+        dens = dd / (2 * n)
+        if best is None or dens > best[0]:
+            best = (dens, s, n, dd)
+        deg = e.groupBy(F.col("src").alias("node")).agg(count.alias("deg"))
+        s, n = materialize(
+            "densest_subgraph_round",
+            deg.filter(2 * F.lit(n) * F.col("deg") > 3 * F.lit(dd)).select("node"),
             count,
         )
-        _, rounds = fixpoint(
-            "densest_subgraph_peel", step, ((s0, edges, edges.count()), n0), _DSG_CAP
-        )
+        survivors = e.join(
+            s.select(F.col("node").alias("src")), "src", "leftsemi"
+        ).join(s.select(F.col("node").alias("dst")), "dst", "leftsemi")
+        e, dd = materialize("densest_subgraph_edges", survivors, count)
+        return (s, e, dd), n
+
+    e, dd = materialize("densest_subgraph_edges", edges, count)
+    s, n = materialize(
+        "densest_subgraph_start", e.select(F.col("src").alias("node")).distinct(), count
+    )
+    _, rounds = fixpoint("densest_subgraph_peel", step, ((s, e, dd), n), _DSG_CAP)
     if rounds_key is not None:
         LAST_ROUNDS[rounds_key] = rounds
     if best is None:
@@ -2271,10 +2239,9 @@ def mis_parts_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Round body: a node's priority is md5(node), a pure function of the
     # id the edge row already carries, so the neighbor-min computes
-    # md5(dst) inline instead of joining pri; the active-induced edge set
-    # feeds both the neighbor-min and the kill set, so it is staged by
-    # src once per round (filled inside cand's own checkpoint job) and
-    # released when the round ends.
+    # md5(dst) inline instead of joining pri.  The active-induced edge set
+    # stays lazy over the src-staged edges (filled by the start
+    # checkpoint) and feeds both the neighbor-min and the kill set.
     count = F.count(F.lit(1))
     mis_parts = []
     with staged(_copurchase_edges(spark, sf_dir, threshold=2), "src") as edges:
@@ -2282,37 +2249,30 @@ def mis_parts_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
         def step(act, n_act):
             if n_act == 0:  # nothing left active
                 return act, n_act
-            active_edges = edges.join(
+            eact = edges.join(
                 act.select(F.col("node").alias("src")), "src", "leftsemi"
             ).join(act.select(F.col("node").alias("dst")), "dst", "leftsemi")
-            with staged(active_edges, "src") as eact:
-                nbmin = (
-                    eact.select(
-                        "src", F.md5(F.col("dst").cast("string")).alias("npri")
-                    )
-                    .groupBy("src")
-                    .agg(F.min("npri").alias("minp"))
-                    .withColumnRenamed("src", "node")
-                )
-                cand = materialize(
-                    "mis_parts_luby_round",
-                    act.join(nbmin, "node", "left_outer")
-                    .filter(F.col("minp").isNull() | (F.col("pri") < F.col("minp")))
-                    .select("node"),
-                )
-                mis_parts.append(cand.select("node", F.lit(len(mis_parts)).alias("r")))
-                killed = cand.unionByName(
-                    eact.join(
-                        cand.select(F.col("node").alias("src")), "src", "leftsemi"
-                    )
-                    .select(F.col("dst").alias("node"))
-                    .distinct()
-                )
-                return materialize(
-                    "mis_parts_luby_active",
-                    act.join(killed, "node", "left_anti"),
-                    count,
-                )
+            nbmin = (
+                eact.select("src", F.md5(F.col("dst").cast("string")).alias("npri"))
+                .groupBy("src")
+                .agg(F.min("npri").alias("minp"))
+                .withColumnRenamed("src", "node")
+            )
+            cand = materialize(
+                "mis_parts_luby_round",
+                act.join(nbmin, "node", "left_outer")
+                .filter(F.col("minp").isNull() | (F.col("pri") < F.col("minp")))
+                .select("node"),
+            )
+            mis_parts.append(cand.select("node", F.lit(len(mis_parts)).alias("r")))
+            killed = cand.unionByName(
+                eact.join(cand.select(F.col("node").alias("src")), "src", "leftsemi")
+                .select(F.col("dst").alias("node"))
+                .distinct()
+            )
+            return materialize(
+                "mis_parts_luby_active", act.join(killed, "node", "left_anti"), count
+            )
 
         nodes = edges.select(F.col("src").alias("node")).distinct()
         pri = nodes.select("node", F.md5(F.col("node").cast("string")).alias("pri"))
@@ -2392,15 +2352,14 @@ def random_walks_hash3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked-edge formulation cost TWO joins per step (degree lookup +
     (cur, k)=(src, rk) rank equi-join) plus a per-node row_number
     window; grouping each node's neighbors once into a sorted array
-    (one partially-aggregated shuffle, checkpointed partitioned by src)
-    makes each step prev JOIN adj + element_at(nbrs, k) -- rows
-    verified identical.  The k-th-neighbor-by-id semantics is the
-    array's sort order; a hub's array is one aggregation-buffer row
-    exactly like the old window partition (degrees here are
-    threshold-bounded; for hub-heavy graphs cap/sample the neighbor
-    list first -- the graph_neighbor_jaccard hub discipline). The md5
-    coin is engine-identical by construction (`_hex_to_int_sql` nibble
-    idiom).
+    (one partially-aggregated shuffle, checkpointed) makes each step
+    prev JOIN adj + element_at(nbrs, k) -- rows verified identical.
+    The k-th-neighbor-by-id semantics is the array's sort order; a hub's
+    array is one aggregation-buffer row exactly like the old window
+    partition (degrees here are threshold-bounded; for hub-heavy graphs
+    cap/sample the neighbor list first -- the graph_neighbor_jaccard hub
+    discipline). The md5 coin is engine-identical by construction
+    (`_hex_to_int_sql` nibble idiom).
     """
     adj = (
         _copurchase_edges(spark, sf_dir, threshold=2)
@@ -2409,7 +2368,6 @@ def random_walks_hash3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sort_array(F.collect_list("dst")).alias("nbrs"),
             F.count(F.lit(1)).alias("outdeg"),
         )
-        .repartition("src")
         .localCheckpoint()
     )
     walks = [adj.select(F.col("src").alias("start"), F.col("src").alias("cur"))]

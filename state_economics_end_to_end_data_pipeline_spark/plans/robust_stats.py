@@ -360,7 +360,6 @@ def mad_approx_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mad_per_group_approx",
-    eager_build=True,
     oracle="""
     SELECT l_returnflag, COUNT(*) AS n,
            TRUE AS median_ok, TRUE AS mad_ok

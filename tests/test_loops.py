@@ -9,7 +9,9 @@
   Sort on the staged side.
 - Every catalog entry leaves the session as it found it: no cache entry,
   no changed setting, no temp view beyond the reader's scan views.
-- ``LAST_ROUNDS`` at sf0.001 is pinned per entry.
+- ``LAST_ROUNDS`` at sf0.001 is pinned per entry, and so is the number of
+  ``staged`` scopes each entry opens: stages hold loop-invariant relations
+  only, so the count does not grow with the rounds.
 """
 
 from __future__ import annotations
@@ -104,8 +106,8 @@ def test_failing_round_propagates_and_releases_staging(spark, sf_dir, name, tag)
     assert _cache_empty(spark)
 
 
-def test_densest_failing_later_round_releases_the_held_survivor_stage(spark, sf_dir):
-    # round 2 runs while round 1's survivor edges are staged
+def test_densest_failing_later_round_leaves_nothing_cached(spark, sf_dir):
+    # round 2 fails after round 1 checkpointed its survivor edges
     spark.catalog.clearCache()
     loops.HOOK = _fail_at("densest_subgraph_round", nth=2)
     try:
@@ -270,28 +272,38 @@ def loop_runs(spark, sf_dir):
     """Every catalog entry built and drained once in one session with no
     clearCache() in between.  Per entry: what it left behind (a cache
     entry, changed settings, added temp views -- the reader's scan views
-    aside) and its LAST_ROUNDS."""
+    aside), its LAST_ROUNDS and how many ``staged`` scopes it opened."""
     spark.catalog.clearCache()
+    opened = []
+
+    def counting(df, key):
+        opened.append(key)
+        return loops.staged(df, key)
+
     out = {}
-    for name, q in sorted(load_all().items()):
-        conf, views = _settings(spark), _temp_views(spark)
-        ga.LAST_ROUNDS.clear()
-        q.fn(spark, sf_dir).collect()
-        left = []
-        if not _cache_empty(spark):
-            left.append("cache")
-            spark.catalog.clearCache()  # judge the next entry on its own
-        after = _settings(spark)
-        left += [f"conf {k}" for k in sorted(conf.keys() | after.keys())
-                 if conf.get(k) != after.get(k)]
-        left += [f"view {v}" for v in sorted(_temp_views(spark) - views)]
-        out[name] = (left, dict(ga.LAST_ROUNDS))
+    with pytest.MonkeyPatch.context() as mp:
+        for mod in (ga, dedup):
+            mp.setattr(mod, "staged", counting)
+        for name, q in sorted(load_all().items()):
+            conf, views = _settings(spark), _temp_views(spark)
+            ga.LAST_ROUNDS.clear()
+            opened.clear()
+            q.fn(spark, sf_dir).collect()
+            left = []
+            if not _cache_empty(spark):
+                left.append("cache")
+                spark.catalog.clearCache()  # judge the next entry on its own
+            after = _settings(spark)
+            left += [f"conf {k}" for k in sorted(conf.keys() | after.keys())
+                     if conf.get(k) != after.get(k)]
+            left += [f"view {v}" for v in sorted(_temp_views(spark) - views)]
+            out[name] = (left, dict(ga.LAST_ROUNDS), len(opened))
     return out
 
 
 def test_catalog_entries_leave_the_session_as_found(loop_runs):
     assert len(loop_runs) == len(load_all())
-    left = [f"{name}: {', '.join(what)}" for name, (what, _) in loop_runs.items() if what]
+    left = [f"{name}: {', '.join(what)}" for name, (what, _, _) in loop_runs.items() if what]
     if left:  # pytest.fail: an assert message would be truncated
         pytest.fail(f"{len(left)} entries changed the session:\n" + "\n".join(left))
 
@@ -311,6 +323,27 @@ ROUNDS_SF0001 = {
 
 def test_last_rounds_at_sf0001(loop_runs):
     got = {}
-    for _, rounds in loop_runs.values():
+    for _, rounds, _ in loop_runs.values():
         got.update(rounds)
     assert got == ROUNDS_SF0001
+
+
+# staged scopes opened per entry at sf0.001; every other entry opens none.
+# Densest (0) and MIS (1) keep per-round state in checkpoints, so neither
+# count grows with the rounds.
+STAGES_SF0001 = {
+    "graph_bfs_hops": 1,
+    "graph_connected_components": 1,
+    "coreness_hindex": 1,
+    "lpa_communities_3iter": 1,
+    "harmonic_centrality_sample": 1,
+    "mis_parts_luby": 1,
+    "pagerank_parts_3iter": 2,
+    "dedup_cluster_survivors": 1,
+    "dedup_semantic_clusters": 1,
+}
+
+
+def test_stages_opened_per_entry_at_sf0001(loop_runs):
+    got = {name: n for name, (_, _, n) in loop_runs.items() if n}
+    assert got == STAGES_SF0001
