@@ -13,6 +13,14 @@ chosen to also be the right default on a 1000-executor cluster:
 - The package's parent directory on the Python workers' ``PYTHONPATH``, so
   UDFs and Python data sources import the package from any working
   directory.
+- One driver JVM policy, ``DRIVER_JVM_OPTIONS``: two JIT compiler threads
+  (one C1, one C2) in place of the JVM's count for the host.  In a cold
+  local pass HotSpot's C2 compiler threads burn more CPU than the tasks do
+  (``docs/COLD_PREMIUM.md``).  It is ``spark.driver.defaultJavaOptions``,
+  which the launcher puts before any ``spark.driver.extraJavaOptions``, so a
+  caller's options are appended and win on a clash.  Executors on a cluster
+  keep the JVM defaults, and under ``spark-submit`` the driver JVM is up
+  before ``get_spark`` runs, so there the submitter's options decide.
 """
 
 from __future__ import annotations
@@ -28,6 +36,11 @@ LOCAL_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(
 # the directory the package is imported from, for the workers' sys.path
 PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+# the driver JVM's JIT policy; C1-only (TieredStopAtLevel=1) is cheaper
+# cold but never lets task code reach C2, and adding the parallel collector
+# saved less than run-to-run spread (docs/COLD_PREMIUM.md)
+DRIVER_JVM_OPTIONS = "-XX:CICompilerCount=2"
 
 
 def get_spark(
@@ -58,6 +71,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JVM_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # full JVM charset set for legacy-encoded CSVs (e.g. windows-1252)

@@ -109,6 +109,21 @@ def test_timed_counts_rows_and_jobs_without_the_ui(spark):
     assert probekit.label(spark) == spark.sparkContext.master
 
 
+def test_jvm_thread_cpu_splits_the_process_total(spark):
+    """Every group is there, and ``exited`` (the process total less what
+    the live and the seen threads hold) is not negative beyond a tick's
+    rounding; a second call with the same ``seen`` only grows."""
+    df = spark.range(1000)
+    df.groupBy((df.id % 7).alias("k")).count().collect()
+    seen: dict = {}
+    cpu = probekit.jvm_thread_cpu(spark, seen)
+    assert tuple(cpu) == probekit.GROUPS
+    assert cpu["exited"] >= -0.05 and cpu["c2"] > 0, cpu
+    assert {g for g, _ in seen.values()} <= set(probekit.GROUPS)
+    again = probekit.jvm_thread_cpu(spark, seen)
+    assert all(again[g] >= cpu[g] for g in probekit.GROUPS if g != "exited"), (cpu, again)
+
+
 @pytest.mark.parametrize(
     "path", sorted((REPO_ROOT / "tools").glob("*.py")), ids=lambda p: p.name
 )

@@ -6,7 +6,10 @@ stages, shuffle bytes (read + write) and spill.
 Why not bench.py: a full 287-entry pass carries suite-position noise (JIT
 warmth, GC debt); optimizing one operator needs a tight loop over the
 entry alone.  With no names, every catalog entry is run once in turn --
-``docs/SHUFFLE_REPORT.jsonl`` is that output at ``--n 1``.
+``docs/SHUFFLE_REPORT.jsonl`` is that output at ``--n 1``.  Before the
+first timed entry the probe runs bench.py's warm-up and one untimed
+``WARM_UP_ENTRY``, so ``first_s`` does not depend on which entry is named
+first (for ``WARM_UP_ENTRY`` itself it is a second run).
 
 Usage:
     python tools/opt_probe.py [--sf-dir /root/testdata/sf0.1] [--n 3]
@@ -33,6 +36,8 @@ from state_economics_end_to_end_data_pipeline_spark.plans import load_all  # noq
 from state_economics_end_to_end_data_pipeline_spark.session import get_spark  # noqa: E402
 from tools.probekit import label, timed  # noqa: E402
 
+WARM_UP_ENTRY = "pagerank_parts_3iter"
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -56,6 +61,10 @@ def main() -> int:
     # same warm-up as bench.py: parquet footers + codegen + Python workers
     spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").count()
     spark.range(32).mapInPandas(lambda it: it, schema="id long").count()
+    # plus one untimed iterative entry (joins, aggregates, loop checkpoints,
+    # 19 jobs, ~7 s at sf0.1), so the first entry named does not pay the
+    # JIT warm-up alone (docs/COLD_PREMIUM.md)
+    qs[WARM_UP_ENTRY].fn(spark, args.sf_dir).collect()
 
     master = label(spark)
     for name in names:

@@ -10,12 +10,15 @@
   when absent, or merges table rows into it for a run over a subset.
 - ``label(spark)`` is the master the session really runs on (``local[N]``).
 - ``star_ring(spark, n)`` is the skew-bomb graph both skew-bomb probes use.
+- ``jvm_thread_cpu(spark)`` is the driver JVM's CPU so far, by thread group
+  (JIT compilers, GC, executor tasks, py4j), read from ``/proc``.
 
 Each probe keeps its own replica builder, its counters and its table format.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import uuid
@@ -26,7 +29,7 @@ from typing import Callable
 REPO = Path(__file__).resolve().parent.parent
 sys.path.append(str(REPO / "perfbench"))
 
-from measure import SparkStats, tree_cpu_s  # noqa: E402,F401 -- tree_cpu_s for the ETL probe
+from measure import CLK_TCK, SparkStats, tree_cpu_s  # noqa: E402,F401 -- tree_cpu_s for the ETL and cold-premium probes
 
 SCALEUP = REPO / "docs" / "SCALEUP.md"
 
@@ -148,3 +151,54 @@ def star_ring(spark, n: int):
     return half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).repartition(32)
+
+
+# (thread name prefix, group); /proc cuts a thread's name to 15 characters
+JVM_THREAD_GROUPS = (
+    ("C2 CompilerThre", "c2"),
+    ("C1 CompilerThre", "c1"),
+    ("G1 ", "gc"),
+    ("GC Thread", "gc"),
+    ("Executor task l", "tasks"),
+    # unnamed threads: py4j's gateway connections, where the Python
+    # driver's calls run (analysis, planning, codegen compile)
+    ("Thread-", "py4j"),
+)
+GROUPS = ("c2", "c1", "gc", "tasks", "py4j", "other", "exited")
+
+
+def _ticks(stat_path: str) -> int:
+    """utime + stime of one /proc stat file (no reaped children)."""
+    with open(stat_path) as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    return int(fields[11]) + int(fields[12])
+
+
+def jvm_thread_cpu(spark, seen: dict | None = None) -> dict[str, float]:
+    """CPU seconds the driver JVM has used so far, by thread group (see
+    ``GROUPS``).  Threads come and go (HotSpot stops idle dynamic compiler
+    threads; the executor's task pool lets idle workers exit), so the
+    process total is read too: ``exited`` is what it holds beyond the live
+    threads.  A caller that samples repeatedly passes the same ``seen``
+    dict (thread id -> group, ticks), which credits a thread that has
+    exited to its group at its last sampled CPU instead."""
+    pid = spark.sparkContext._gateway.proc.pid
+    groups = dict.fromkeys(GROUPS, 0)
+    live = set()
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                name = f.read().strip()
+            ticks = _ticks(f"/proc/{pid}/task/{tid}/stat")
+        except OSError:  # exited between the listing and the read
+            continue
+        group = next((g for p, g in JVM_THREAD_GROUPS if name.startswith(p)), "other")
+        groups[group] += ticks
+        live.add(tid)
+        if seen is not None:
+            seen[tid] = (group, ticks)
+    for tid, (group, ticks) in (seen or {}).items():
+        if tid not in live:
+            groups[group] += ticks
+    groups["exited"] = _ticks(f"/proc/{pid}/stat") - sum(groups.values())
+    return {g: t / CLK_TCK for g, t in groups.items()}
